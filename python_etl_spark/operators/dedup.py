@@ -37,13 +37,12 @@ from pyspark.sql import functions as F
 # (guide §2: scale-adaptive, derived from input size, never a
 # core-count constant) and capped at the session parallelism.
 # Parameterised for cluster tuning; the default keeps the driver bench
-# comparable across rounds.
+# comparable across rounds (an unparsable value falls back to it, and
+# the knob is clamped to >= 1).
 def _spread_task_bytes() -> int:
-    import os
+    from python_etl_spark.session import env_int
 
-    return int(
-        os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", str(96 * 1024))
-    )
+    return env_int("SPARK_GRAFT_SPREAD_TASK_BYTES", 96 * 1024)
 
 
 # (applicationId, analyzed-plan semanticHash, source fingerprint) ->
@@ -112,6 +111,21 @@ def _arrow_engine_available() -> bool:
     except ImportError:
         return False
     return True
+
+
+def _resolve_engine(engine: str | None) -> str:
+    """The sketch engine to run. ``None`` (the default) picks the Arrow
+    kernel when numpy+pyarrow import and the JVM twin otherwise; an
+    EXPLICIT choice is honored, so ``engine='arrow'`` without them
+    raises instead of silently running the slower Catalyst path."""
+    if engine is None:
+        return "arrow" if _arrow_engine_available() else "jvm"
+    if engine == "arrow" and not _arrow_engine_available():
+        raise ImportError(
+            "engine='arrow' needs numpy and pyarrow; install them or "
+            "pass engine='jvm' (or leave engine unset to fall back)"
+        )
+    return engine
 
 
 # ------------------------------- shingling --------------------------------
@@ -539,7 +553,7 @@ def minhash_signatures(
     num_hashes: int = 64,
     k: int = 3,
     max_doc_freq: int | None = None,
-    engine: str = "arrow",
+    engine: str | None = None,
 ) -> DataFrame:
     """(id, sig array<long>) — num_hashes independent min-hashes.
 
@@ -550,15 +564,16 @@ def minhash_signatures(
     sf0.1). Each hash function is a cheap long-input remix of the
     single string hash (hashing the string once, not 64 times).
 
-    ``engine='arrow'`` (default) evaluates the 64 min-remixes in ONE
-    vectorized numpy kernel over Arrow batches (guide: do the heavy
-    lifting in native code inside the map stage). The kernel is a
-    bit-exact replication of Spark's two-argument ``xxhash64(int,
-    bigint)`` — verified value-for-value against the JVM in
-    tests — so signatures, bands and downstream pair sets are
-    IDENTICAL to ``engine='jvm'``, which keeps the pure-Catalyst
-    expression (interpreted higher-order functions, ~4x slower at
-    sf0.1). String->shingle hashing stays JVM-side either way; only
+    ``engine='arrow'`` (the default when numpy+pyarrow import; an
+    explicit ``'arrow'`` without them raises) evaluates the 64
+    min-remixes in ONE vectorized numpy kernel over Arrow batches
+    (guide: do the heavy lifting in native code inside the map
+    stage). The kernel is a bit-exact replication of Spark's
+    two-argument ``xxhash64(int, bigint)`` — verified value-for-value
+    against the JVM in tests — so signatures, bands and downstream
+    pair sets are IDENTICAL to ``engine='jvm'``, which keeps the
+    pure-Catalyst expression (interpreted higher-order functions, ~4x
+    slower at sf0.1). String->shingle hashing stays JVM-side either way; only
     the (grams x seeds) remix+min crosses Arrow, and only the two
     columns it needs are shipped.
 
@@ -590,9 +605,7 @@ def minhash_signatures(
         F.transform(_word_grams(toks, k), lambda g: F.xxhash64(g)),
     ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", toks))))
     docs_g = docs.select(F.col(id_col).alias("id"), grams.alias("grams"))
-    if engine == "arrow" and not _arrow_engine_available():
-        engine = "jvm"  # numpy-less deployment: keep the Catalyst twin
-    if engine == "arrow":
+    if _resolve_engine(engine) == "arrow":
         # the kernel passes ids through untouched — declare their
         # NATIVE type (string doc ids are the common corpus key; a
         # hard-coded bigint would silently null them)
@@ -755,7 +768,7 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "arrow",
+    engine: str | None = None,
 ) -> DataFrame:
     """(id, simhash long) — 64-bit SimHash over distinct tokens.
 
@@ -763,18 +776,17 @@ def simhash(
     bit is 1 when the vote sum is positive. Bits are OR-folded into one
     long (no additive overflow under ANSI mode).
 
-    ``engine='arrow'`` (default, r14) computes the votes from the
-    IN-ROW distinct token-hash array in one vectorized numpy map stage
-    — a narrow map with ZERO exchanges, vs the explode + 64-sum
+    ``engine='arrow'`` (default, r14, when numpy+pyarrow import; an
+    explicit ``'arrow'`` without them raises) computes the votes from
+    the IN-ROW distinct token-hash array in one vectorized numpy map
+    stage — a narrow map with ZERO exchanges, vs the explode + 64-sum
     groupBy aggregation the JVM path keeps (one exchange plus the
     exploded materialization). Token hashing stays JVM-side
     (xxhash64 over strings); value-identity is pinned in
     tests/test_dedup.py. Docs with NULL text are dropped by both
     paths (explode of null vs an explicit filter)."""
     docs = _spread(docs)
-    if engine == "arrow" and not _arrow_engine_available():
-        engine = "jvm"  # numpy-less deployment: keep the Catalyst twin
-    if engine == "arrow":
+    if _resolve_engine(engine) == "arrow":
         hs = F.transform(
             F.array_distinct(F.split(F.col(text_col), " ", -1)),
             lambda t: F.xxhash64(t),

@@ -18,6 +18,7 @@ def upsert(
     updates: DataFrame,
     keys: list[str],
     version_col: str | None = None,
+    change_col: str | None = None,
 ) -> DataFrame:
     """updates override base on key collisions; schemas must match.
 
@@ -37,7 +38,19 @@ def upsert(
     versioned base row (no version ⇒ cannot prove it is newer). Two
     NULL versions fall back to the update-wins tie-break. Changelogs
     where null-versioned updates must still win should
-    ``coalesce(version, <max sentinel>)`` before calling."""
+    ``coalesce(version, <max sentinel>)`` before calling.
+
+    CHANGE FEED in the same pass: with ``change_col`` every output row
+    carries a tag in that column — ``data`` for a row of the merged
+    result, or the change it records: ``update_preimage`` for each
+    base row of a key the updates touch, ``update_postimage`` for
+    that key's surviving row, ``insert`` for the surviving row of a
+    key the base lacks. A row that is both data and a change appears
+    once per tag. The tags come from the same key window (its
+    whole-partition frame says which sides hold the key), so data and
+    feed cost one shuffle together. Keys group as the window groups
+    them (NULL keys form one group), so the feed types exactly the
+    rows the data path replaced."""
     tagged = updates.withColumn("__pri", F.lit(0)).unionByName(
         base.withColumn("__pri", F.lit(1))
     )
@@ -46,11 +59,24 @@ def upsert(
         else [F.asc("__pri")]
     )
     w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__pri", "__rn")
+    ranked = tagged.withColumn("__rn", F.row_number().over(w))
+    if change_col is None:
+        return ranked.where(F.col("__rn") == 1).drop("__pri", "__rn")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = ranked.withColumn(
+        "__upd", F.min("__pri").over(whole) == 0
+    ).withColumn("__base", F.max("__pri").over(whole) == 1)
+    first = F.col("__rn") == 1
+    matched = F.col("__upd") & F.col("__base")
+    tags = F.array(
+        F.when(first, F.lit("data")),
+        F.when(matched & (F.col("__pri") == 1), F.lit("update_preimage")),
+        F.when(matched & first, F.lit("update_postimage")),
+        F.when(~F.col("__base") & first, F.lit("insert")),
     )
+    return ranked.withColumn(
+        change_col, F.explode(F.array_compact(tags))
+    ).drop("__pri", "__rn", "__upd", "__base")
 
 
 def latest_by_key(
@@ -86,6 +112,7 @@ def merge_clauses(
     return_actions: bool = False,
     matched_set: dict | None = None,
     insert_values: dict | None = None,
+    change_col: str | None = None,
 ):
     """Full conditional MERGE (the public Delta/ANSI MERGE surface):
 
@@ -124,7 +151,13 @@ def merge_clauses(
     a MERGE-maintained table upholds; Delta raises on multi-source
     matches for the same reason). With ``return_actions`` also returns
     a ``(keys..., action)`` frame so a change-feed writer can type its
-    rows per clause."""
+    rows per clause.
+
+    With ``change_col`` the result is the merged rows AND the change
+    feed from the same join, tagged in that column: ``data`` for a
+    merged row, ``update_preimage``/``update_postimage`` (target /
+    merged values) for an updated key, ``delete`` (target values) for
+    a matched-delete key, ``insert`` for an inserted row."""
 
     def _cond(c, default: bool):
         if c is None or c is False:
@@ -207,6 +240,35 @@ def merge_clauses(
         .alias(c)
         for c in cols
     ]
+    if change_col is not None:
+        act = F.col("__action")
+        pre_cols = [
+            (F.col(c) if c in keys else F.col(f"t.{c}")).alias(c)
+            for c in cols
+        ]
+
+        def _row(cond, tag: str, vals: list):
+            return F.when(
+                cond,
+                F.struct(
+                    *[
+                        v.cast(schema_by_name[c]).alias(c)
+                        for v, c in zip(vals, cols)
+                    ],
+                    F.lit(tag).alias(change_col),
+                ),
+            )
+
+        rows = F.array(
+            _row(act.isin("keep", "update", "insert"), "data", out_cols),
+            _row(act == "update", "update_preimage", pre_cols),
+            _row(act == "update", "update_postimage", out_cols),
+            _row(act == "delete", "delete", pre_cols),
+            _row(act == "insert", "insert", out_cols),
+        )
+        return tagged.select(
+            F.explode(F.array_compact(rows)).alias("__r")
+        ).select("__r.*")
     merged = tagged.where(
         F.col("__action").isin("keep", "update", "insert")
     ).select(*out_cols)

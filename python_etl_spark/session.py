@@ -42,6 +42,27 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def env_int(name: str, default: int) -> int:
+    """A positive integer knob from the environment: ``default`` when
+    unset or unparsable (with a warning naming the bad value),
+    clamped to >= 1 — a typo'd knob never crashes session start-up or
+    yields a zero/negative size."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        import warnings
+
+        warnings.warn(
+            f"{name}={raw!r} is not an integer; using {default}",
+            stacklevel=2,
+        )
+        return default
+    return max(1, value)
+
+
 def get_spark(
     app_name: str = "python-etl-spark",
     master: str | None = None,
@@ -52,8 +73,8 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
-    n_shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", "32")
+    n_shuffle = shuffle_partitions or env_int(
+        "SPARK_SQL_SHUFFLE_PARTITIONS", 32
     )
     conf = {
         **RUNTIME_CONFS,

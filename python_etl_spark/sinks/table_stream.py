@@ -415,6 +415,7 @@ def _commit_files(
                 carry_stats=cur.get("dir_stats"),
                 dvs=cur.get("dvs"),
                 carry_blooms=cur.get("dir_blooms"),
+                carry_schemas=cur.get("dir_schemas"),
                 carry_files=cur.get("file_stats"),
             )
         except CommitConflictError:

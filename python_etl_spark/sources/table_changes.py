@@ -9,9 +9,11 @@ and a re-baseline barrier (overwrite, ``track_changes=False``) is
 silently invisible. Here the offset IS the commit version: each
 micro-batch covers exactly the manifests in ``(start, end]``, appends
 surface as typed ``insert`` rows, merge/delete commits replay their
-persisted cdf files, compactions contribute nothing, and a barrier op
-inside the pending range raises — the stream fails loudly telling the
-consumer to re-baseline, exactly like the batch ``row_changes``.
+persisted cdf files (typed ``cdf-*/_change_type=<t>/`` partitions, or
+the flat files older commits wrote), compactions contribute nothing,
+and a barrier op inside the pending range raises — the stream fails
+loudly telling the consumer to re-baseline, exactly like the batch
+``row_changes``.
 
 Scale shape: ``partitions()`` plans ONE InputPartition per change
 file (driver-side metadata walk, O(commits in range)); ``read`` runs
@@ -111,7 +113,14 @@ def _plan_partitions(
             pass  # row-preserving rewrite / metadata-only: no rows
         elif op in ("merge", "delete", "delete_mor", "update") and m.get("cdf_dir"):
             for f in _parquet_files(m["cdf_dir"]):
-                parts.append(_ChangeFilePartition(f, None, v, renames))
+                # typed layout: the change type is the file's
+                # ``_change_type=<t>`` path segment; flat legacy files
+                # (no segment) carry their own column
+                parts.append(
+                    _ChangeFilePartition(
+                        f, _part_value(f, CHANGE_TYPE), v, renames
+                    )
+                )
         else:
             raise ValueError(
                 f"table_changes: commit v{v} is a '{op}' with no change "

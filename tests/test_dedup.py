@@ -115,6 +115,32 @@ def test_simhash_arrow_kernel_bit_identical_to_jvm(spark, corpus):
         assert arrow == jvm
 
 
+def test_explicit_arrow_engine_is_never_downgraded(spark, corpus, monkeypatch):
+    """Without numpy/pyarrow an EXPLICIT engine='arrow' raises, while
+    the defaulted engine falls back to the JVM twin with the same
+    values; the explicit choice is never silently swapped."""
+    from python_etl_spark.operators import dedup
+
+    want_sig = {
+        r.id: list(r.sig)
+        for r in minhash_signatures(corpus, engine="jvm").collect()
+    }
+    want_sim = {
+        r.id: r.simhash for r in dedup.simhash(corpus, engine="jvm").collect()
+    }
+    monkeypatch.setattr(dedup, "_arrow_engine_available", lambda: False)
+    with pytest.raises(ImportError, match="engine='arrow'"):
+        minhash_signatures(corpus, engine="arrow")
+    with pytest.raises(ImportError, match="engine='arrow'"):
+        dedup.simhash(corpus, engine="arrow")
+    sigs = minhash_signatures(corpus)
+    assert "MapInArrow" not in sigs._jdf.queryExecution().toString()
+    assert {r.id: list(r.sig) for r in sigs.collect()} == want_sig
+    sims = dedup.simhash(corpus)
+    assert "MapInArrow" not in sims._jdf.queryExecution().toString()
+    assert {r.id: r.simhash for r in sims.collect()} == want_sim
+
+
 def test_minhash_lsh_finds_near_dup(spark, corpus):
     pairs = {
         (r.doc_a, r.doc_b)

@@ -1839,14 +1839,10 @@ def test_merge_bloom_prunes_uuid_shaped_keys(spark, tmp_path, monkeypatch):
     probed: list[list] = []
     orig = VersionedTable._union_dirs
 
-    def spy(self, spark_, dirs, evolved, tag_dir=False, renames=None,
-            file_subsets=None, drops=None):
+    def spy(self, spark_, dirs, evolved, tag_dir=False, **kw):
         if tag_dir:
             probed.append(list(dirs))
-        return orig(
-            self, spark_, dirs, evolved, tag_dir=tag_dir,
-            renames=renames, file_subsets=file_subsets, drops=drops,
-        )
+        return orig(self, spark_, dirs, evolved, tag_dir=tag_dir, **kw)
 
     monkeypatch.setattr(VersionedTable, "_union_dirs", spy)
     t.merge(upd, keys=["k"])
@@ -1920,13 +1916,10 @@ def test_merge_probe_uses_file_subset(spark, tmp_path, monkeypatch):
     seen = {}
     orig = VersionedTable._union_dirs
 
-    def spy(self, spark_, dirs, evolved, tag_dir=False, renames=None,
-            file_subsets=None, drops=None):
+    def spy(self, spark_, dirs, evolved, tag_dir=False, **kw):
         if tag_dir:
-            seen["subsets"] = file_subsets
-        return orig(self, spark_, dirs, evolved, tag_dir=tag_dir,
-                    renames=renames, file_subsets=file_subsets,
-                    drops=drops)
+            seen["subsets"] = kw.get("file_subsets")
+        return orig(self, spark_, dirs, evolved, tag_dir=tag_dir, **kw)
 
     monkeypatch.setattr(VersionedTable, "_union_dirs", spy)
     t.merge(
@@ -6022,3 +6015,174 @@ def test_copy_into_pattern_and_evolution(spark, tmp_path):
             f"COPY INTO vt'{t.root}' FROM '{stage}' FILEFORMAT = "
             f"PARQUET COPY_OPTIONS ('nope' = '1')",
         )
+
+
+def _jobs(spark, fn):
+    """(fn(), Spark jobs it ran), counted under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _budget_table(spark, tmp_path):
+    t = VersionedTable(str(tmp_path / "budget"))
+    t.create(spark.range(0, 3000).selectExpr("id AS k", "id % 7 AS g",
+                                             "CAST(id AS double) AS v"))
+    for lo in (3000, 4000):
+        t.append(spark.range(lo, lo + 1000).selectExpr(
+            "id AS k", "id % 7 AS g", "CAST(id AS double) AS v"))
+    return t
+
+
+def test_commit_and_read_job_budgets(spark, tmp_path):
+    """Job-count pins (noise-free, unlike wall time): snapshot and
+    pruned reads and the change feed construct with ZERO jobs (every
+    dir's schema comes from the manifest, no inference job); a
+    copy-on-write merge writes data and change feed in one pass
+    (bounds + probe + one write: <= 10 jobs) and delete_keys the same
+    (<= 8)."""
+    t = _budget_table(spark, tmp_path)
+    assert _jobs(spark, lambda: t.read(spark))[1] == 0
+    assert _jobs(spark, lambda: t.read_pruned(spark, "k", 100, 200))[1] == 0
+    upd = spark.createDataFrame(
+        [(k, 1, -1.0) for k in range(10, 4010, 100)]
+        + [(k, 2, -2.0) for k in range(9000, 9010)],
+        "k long, g long, v double",
+    )
+    v, n = _jobs(spark, lambda: t.merge(upd, keys=["k"]))
+    assert n <= 10, n
+    dels = spark.createDataFrame([(k,) for k in range(0, 5000, 250)], "k long")
+    v2, n = _jobs(spark, lambda: t.delete_keys(dels))
+    assert n <= 8, n
+    feed, n = _jobs(spark, lambda: t.row_changes(spark, v - 1))
+    assert n == 0
+    got = {
+        r["_change_type"]: r["n"]
+        for r in feed.groupBy("_change_type").count()
+        .withColumnRenamed("count", "n").collect()
+    }
+    assert got == {
+        "update_preimage": 40, "update_postimage": 40, "insert": 10,
+        "delete": 20,
+    }
+    assert t.row_count() == 5000 + 10 - 20
+    assert t.read(spark).count() == t.row_count()
+
+
+def _assert_recorded_schemas(spark, t):
+    import json
+
+    from pyspark.sql.types import StructType
+
+    m = t._read_manifest()
+    assert set(m["dir_schemas"]) == set(m["data_dirs"])
+    for d, js in m["dir_schemas"].items():
+        assert spark.read.parquet(d).schema == StructType.fromJson(
+            json.loads(js)
+        ), d
+
+
+def test_manifest_records_inferred_schema_per_dir(spark, tmp_path):
+    """Each commit records its new dir's read schema (from the footer's
+    Spark row-metadata) — exactly what ``spark.read.parquet(dir)``
+    infers — for plain, evolved, widened, renamed and hive-partitioned
+    dirs, so reads pass it instead of running an inference job."""
+    plain = VersionedTable(str(tmp_path / "plain"))
+    plain.create(spark.createDataFrame([(1, "a")], "k long, s string"))
+    _assert_recorded_schemas(spark, plain)
+
+    evo = VersionedTable(str(tmp_path / "evolved"))
+    evo.create(spark.createDataFrame([(1, "a")], "k long, s string"))
+    evo.append(
+        spark.createDataFrame([(2, "b", 2.5)], "k long, s string, x double"),
+        allow_evolution=True,
+    )
+    _assert_recorded_schemas(spark, evo)
+    assert _rows(evo.read(spark)) == [(1, "a", None), (2, "b", 2.5)]
+
+    wide = VersionedTable(str(tmp_path / "widened"))
+    wide.create(spark.createDataFrame([(1, 5)], "k long, n int"))
+    wide.append(
+        spark.createDataFrame([(2, 2**40)], "k long, n long"),
+        allow_evolution=True,
+    )
+    _assert_recorded_schemas(spark, wide)
+    assert _rows(wide.read(spark)) == [(1, 5), (2, 2**40)]
+
+    ren = VersionedTable(str(tmp_path / "renamed"))
+    ren.create(spark.createDataFrame([(1, "a")], "k long, s string"))
+    ren.rename_column("s", "label")
+    ren.append(spark.createDataFrame([(2, "b")], "k long, label string"))
+    _assert_recorded_schemas(spark, ren)
+    assert _rows(ren.read(spark)) == [(1, "a"), (2, "b")]
+
+    part = VersionedTable(str(tmp_path / "hive"))
+    part.create(
+        spark.createDataFrame(
+            [(1, "2024-01-01", 7), (2, "2024-01-02", 8)],
+            "k long, day string, p int",
+        ),
+        partition_by=["day", "p"],
+    )
+    part.append(
+        spark.createDataFrame([(3, "2024-01-03", 9)], "k long, day string, p int")
+    )
+    _assert_recorded_schemas(spark, part)
+    assert part.read(spark).schema == spark.read.parquet(
+        part._read_manifest()["data_dirs"][0]
+    ).schema
+
+
+def test_older_manifests_and_flat_feeds_still_read(spark, tmp_path):
+    """Manifests without recorded schemas fall back to inference, and
+    a flat legacy ``cdf-*`` dir (``_change_type`` a file column) reads
+    the same as the typed layout through row_changes and the
+    registered ``table_changes`` source."""
+    import json
+    import os
+
+    from python_etl_spark.sources.table_changes import TableChangesDataSource
+
+    t = _cdf_table(spark, tmp_path)
+    t.merge(
+        spark.createDataFrame(
+            [(2, "b", 99), (6, "f", 60)], "id long, g string, v long"
+        ),
+        ["id"],
+    )
+    t.delete_where(F.col("id") == 3)
+    cols = ["_commit_version", "_change_type", "id", "g", "v"]
+    want = _rows(t.row_changes(spark, 0).select(*cols))
+    snap = _rows(t.read(spark))
+    # rewrite every manifest in the pre-schema shape with flat feeds
+    for i in range(t.latest_version() + 1):
+        path = t._manifest_path(i)
+        with open(path) as f:
+            m = json.load(f)
+        m.pop("dir_schemas", None)
+        if m.pop("cdf_schema", None):
+            flat = m["cdf_dir"] + "-flat"
+            spark.read.parquet(m["cdf_dir"]).coalesce(1).write.parquet(flat)
+            m["cdf_dir"] = flat
+        with open(path, "w") as f:
+            json.dump(m, f)
+    assert not any(
+        n.startswith("_change_type=")
+        for n in os.listdir(t._read_manifest(2)["cdf_dir"])
+    )
+    assert _rows(t.read(spark)) == snap
+    assert _rows(t.row_changes(spark, 0).select(*cols)) == want
+    spark.dataSource.register(TableChangesDataSource)
+    src = (
+        spark.read.format("table_changes")
+        .option("startingVersion", 0)
+        .load(t.root)
+    )
+    assert _rows(src.select(*cols)) == want
