@@ -31,31 +31,6 @@ def dot(a: str | Column, b: str | Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def dot_unrolled(a: str, b: str, dim: int) -> Column:
-    """dot() unrolled for a KNOWN fixed dimension: a left-associated
-    sum chain seeded with the same 0.0 the fold starts from, so every
-    intermediate double is BIT-IDENTICAL to dot() — but the expression
-    is plain arithmetic over GetArrayItem, which whole-stage codegen
-    compiles, where the higher-order aggregate/zip_with fold is
-    interpreted (CodegenFallback).
-
-    Caveats (why this is NOT the default dot):
-    * Only safe when both arrays are schema-guaranteed >= dim elements:
-      under ANSI mode a short array errors; under non-ANSI the access
-      yields NULL, the whole product chain goes NULL and the row
-      silently drops out of downstream top-k/threshold logic — unlike
-      the fold, which sums over the actual length (ADVICE r14).
-    * The generated whole-stage class is huge; its Janino+JIT compile
-      (~0.2-0.7 s for three 64-term chains) is re-paid whenever
-      Spark's ~100-entry generated-class cache has evicted it, so
-      multi-query or cold workloads can regress (r14 driver bench).
-      Use it only where one plan runs hot enough to amortize."""
-    expr = "0.0D"
-    for i in range(dim):
-        expr = f"({expr} + ({a}[{i}] * {b}[{i}]))"
-    return F.expr(expr)
-
-
 def norm_sq(a: str | Column) -> Column:
     return dot(a, a)
 

@@ -30,15 +30,8 @@ def brute_force_topk(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
-    """Pass ``dim`` when the embedding width is schema-guaranteed: the
-    corpus-x-query dots then use the unrolled codegen chain
-    (functions.vector.dot_unrolled — bit-identical to the interpreted
-    higher-order fold, but whole-stage-compiled)."""
-    from python_etl_spark.functions.vector import dot_unrolled
-
-    nsq = dot_unrolled("vec", "vec", dim) if dim else norm_sq_exact("vec")
+    nsq = norm_sq_exact("vec")
     v = embeddings.select(
         F.col(id_col).alias("id"), as_double(vec_col).alias("vec")
     ).select("id", "vec", nsq.alias("nsq"))
@@ -52,10 +45,7 @@ def brute_force_topk(
         F.col("vec").alias("cvec"),
         F.col("nsq").alias("cnsq"),
     )
-    dp = (
-        dot_unrolled("qvec", "cvec", dim) if dim
-        else dot_exact("qvec", "cvec")
-    )
+    dp = dot_exact("qvec", "cvec")
     cos = cosine_from_parts(dp, F.col("qnsq"), F.col("cnsq"))
     scored = (
         corpus.join(F.broadcast(queries))

@@ -109,7 +109,6 @@ def merge_clauses(
     matched_update=None,
     matched_delete=None,
     not_matched_insert=True,
-    return_actions: bool = False,
     matched_set: dict | None = None,
     insert_values: dict | None = None,
     change_col: str | None = None,
@@ -145,13 +144,11 @@ def merge_clauses(
     raises — keys are the row identity.
 
     One full-outer join on the key (single shuffle, no driver state):
-    each row gets an action — delete / update / keep / insert / skip —
-    and the output projects source columns for update+insert, target
-    columns otherwise. Both sides should be key-unique (the invariant
-    a MERGE-maintained table upholds; Delta raises on multi-source
-    matches for the same reason). With ``return_actions`` also returns
-    a ``(keys..., action)`` frame so a change-feed writer can type its
-    rows per clause.
+    each row gets an action — delete / update / keep / insert, none for
+    a source row no clause inserts — and the output projects source
+    columns for update+insert, target columns otherwise. Both sides
+    should be key-unique (the invariant a MERGE-maintained table
+    upholds; Delta raises on multi-source matches for the same reason).
 
     With ``change_col`` the result is the merged rows AND the change
     feed from the same join, tagged in that column: ``data`` for a
@@ -203,14 +200,12 @@ def merge_clauses(
     s = updates.withColumn("__s", F.lit(1)).alias("s")
     j = t.join(s, keys, "full_outer")
     matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
-    s_only = F.col("__t").isNull() & F.col("__s").isNotNull()
     action = (
         F.when(matched & _cond(matched_delete, False), F.lit("delete"))
         .when(matched & _cond(matched_update, False), F.lit("update"))
-        .when(matched, F.lit("keep"))
-        .when(s_only & _cond(not_matched_insert, False), F.lit("insert"))
-        .when(s_only, F.lit("skip"))
-        .otherwise(F.lit("keep"))  # target-only row
+        .when(F.col("__t").isNotNull(), F.lit("keep"))
+        # source-only row: NULL action (dropped) unless inserted
+        .when(_cond(not_matched_insert, False), F.lit("insert"))
     )
     tagged = j.withColumn("__action", action)
     is_upd = F.col("__action") == "update"
@@ -269,15 +264,9 @@ def merge_clauses(
         return tagged.select(
             F.explode(F.array_compact(rows)).alias("__r")
         ).select("__r.*")
-    merged = tagged.where(
+    return tagged.where(
         F.col("__action").isin("keep", "update", "insert")
     ).select(*out_cols)
-    if not return_actions:
-        return merged
-    actions = tagged.where(F.col("__action") != "keep").select(
-        *keys, F.col("__action").alias("action")
-    )
-    return merged, actions
 
 
 def conform_schema(df, target_ddl: str, strict: bool = False):

@@ -200,15 +200,10 @@ WHERE rnk <= 5
 )
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    # Deliberately NOT passing dim=64 (the r14 unroll): the three
-    # 64-term codegen chains (corpus nsq, query nsq, q·c dot) compile
-    # to a huge whole-stage class whose Janino+JIT cost (~0.7 s) is
-    # paid again whenever Spark's ~100-entry generated-class cache has
-    # evicted it — which a multi-query pass guarantees — so cold/mixed
-    # workloads regress (r14 driver: 0.881→1.588 s) for a ~0.2 s
-    # steady-state win. The fold is interpreted but tiny at any scale
-    # where this exact-baseline query is runnable (it is O(n·q) by
-    # design; the ANN twins are the 100 TB path).
+    # The dot products stay the interpreted higher-order fold: a
+    # fixed-width unrolled chain compiles to a huge whole-stage class
+    # whose Janino+JIT cost is re-paid whenever the generated-class
+    # cache evicts it, which a multi-query pass guarantees.
     return brute_force_topk(emb, query_ids=list(range(10)), k=5)
 
 

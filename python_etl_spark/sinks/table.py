@@ -68,6 +68,23 @@ Commit protocol (safe under CONCURRENT writers):
   the copy-on-write ops recompute from the new base), giving
   serializable last-writer-wins semantics with bounded retries.
 
+Every writer commits through ``_commit(dirs, op, version, ...,
+base=)``, where ``base`` is the manifest the op was planned on (the
+head it read; the restored version for ``restore``; the source for
+``clone``). Each dir the new manifest keeps from ``base`` carries
+``base``'s records for it: dir and file stats, read schema, bloom and
+deletion-vector scope; only new dirs are footer-walked, and a
+rewritten dir's records and DV scope drop with it. A merge-on-read
+delete adds its one new DV entry (``dv=``); a rename passes a base
+whose stats are re-keyed to the new name. All conflict retries go
+through ``_retry_commit``: it re-reads the manifest, re-runs the op's
+attempt against it and gives up after ``max_retries`` conflicts;
+append and overwrite write their data dir once and retry only the
+manifest. The four rewrites (``compact``, ``compact_bins``,
+``compact_tail``, DV materialization) are one routine,
+``_rewrite_dirs``, that differs only in which dirs it picks and how it
+clusters.
+
 Readers see either the old or the new version, never a half-commit.
 Old versions stay readable (time travel) until ``vacuum``; data dirs
 abandoned by a crashed or conflicted writer are unreachable (no
@@ -985,8 +1002,8 @@ class VersionedTable:
             raise ValueError(
                 f"no identity columns declared at {self.root}"
             )
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             walked = self._identity_highwater(cur)
             row = self.read(spark, cur["version"]).select(
                 *[
@@ -1007,23 +1024,12 @@ class VersionedTable:
                     if int(s["step"]) > 0
                     else min(walked[c], scanned)
                 )
-            try:
-                self._commit(
-                    cur["data_dirs"],
-                    "sync_identity",
-                    cur["version"] + 1,
-                    {"identity_highwater": hw},
-                    num_rows=self.row_count(cur["version"]),
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=cur.get("dvs"),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-                return hw
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            self._commit_metadata(
+                cur, "sync_identity", {"identity_highwater": hw}
+            )
+            return hw
+
+        return self._retry_commit(_attempt)
 
     def add_constraint(self, name: str, expr: str) -> int:
         """Add a CHECK constraint as a METADATA-ONLY commit. The whole
@@ -1031,8 +1037,8 @@ class VersionedTable:
         already carrying violating rows refuses the constraint, like
         Delta's ADD CONSTRAINT."""
         spark = SparkSession.active()
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             cons = self.constraints(cur["version"])
             if name in cons:
                 raise ValueError(
@@ -1044,22 +1050,13 @@ class VersionedTable:
                 snap.schema, {name: expr}, "constraint"
             )
             self._enforce_constraints(snap, {name: expr})
-            try:
-                return self._commit(
-                    cur["data_dirs"],
-                    "add_constraint",
-                    cur["version"] + 1,
-                    {"constraint_add": {"name": name, "expr": expr}},
-                    num_rows=self.row_count(cur["version"]),
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=cur.get("dvs"),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit_metadata(
+                cur,
+                "add_constraint",
+                {"constraint_add": {"name": name, "expr": expr}},
+            )
+
+        return self._retry_commit(_attempt)
 
     def _constraint_refs(
         self, col: str, version: int | None = None
@@ -1097,26 +1094,15 @@ class VersionedTable:
         """Drop a CHECK constraint (metadata-only commit). Unknown
         names raise — a typo silently 'succeeding' would leave the
         constraint enforced."""
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             if name not in self.constraints(cur["version"]):
                 raise ValueError(f"no constraint named '{name}'")
-            try:
-                return self._commit(
-                    cur["data_dirs"],
-                    "drop_constraint",
-                    cur["version"] + 1,
-                    {"constraint_drop": name},
-                    num_rows=self.row_count(cur["version"]),
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=cur.get("dvs"),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit_metadata(
+                cur, "drop_constraint", {"constraint_drop": name}
+            )
+
+        return self._retry_commit(_attempt)
 
     @staticmethod
     def _bloom_probe_exprs(cols: list[str], m: int) -> list:
@@ -1415,6 +1401,38 @@ class VersionedTable:
             done.append(tid)
         return sorted(set(done))
 
+    def _retry_commit(self, attempt, cur: dict | None = None):
+        """The one optimistic-concurrency loop every writer commits
+        through: run ``attempt(cur)`` against the manifest it plans
+        on and, when its publish loses the version race
+        (``CommitConflictError``), re-read the winner's manifest and
+        run it again, up to ``max_retries`` times. ``cur`` is an
+        already-read first base (append and overwrite plan on the
+        manifest they read before writing their data dir, which a
+        retry does not rewrite)."""
+        for i in range(self.max_retries + 1):
+            if cur is None or i:
+                cur = self._read_manifest()
+            try:
+                return attempt(cur)
+            except CommitConflictError:
+                if i == self.max_retries:
+                    raise
+
+    def _commit_metadata(
+        self, cur: dict, op: str, meta: dict, base: dict | None = None
+    ) -> int:
+        """A METADATA-ONLY commit on top of ``cur``: the same dirs,
+        the same rows, new ``meta``."""
+        return self._commit(
+            cur["data_dirs"],
+            op,
+            cur["version"] + 1,
+            meta,
+            num_rows=self.row_count(cur["version"]),
+            base=base or cur,
+        )
+
     def _commit(
         self,
         dirs: list[str],
@@ -1423,26 +1441,28 @@ class VersionedTable:
         meta: dict | None = None,
         num_rows: int | None = None,
         feed: tuple | None = None,
-        carry_stats: dict | None = None,
-        dvs: list[dict] | None = None,
-        carry_blooms: dict | None = None,
-        carry_files: dict | None = None,
-        carry_schemas: dict | None = None,
+        base: dict | None = None,
+        dv: dict | None = None,
     ) -> int:
+        """Publish version ``version`` listing ``dirs``. ``base`` is the
+        manifest the op was planned on: every dir it already lists
+        keeps its per-dir records from it (stats, file stats, read
+        schema, bloom, deletion-vector scope); ``dv`` is a
+        merge-on-read delete's new deletion-vector entry."""
         import time
 
         # dir-granularity data-skipping stats: footer-derived per-column
         # [min, max] for every dir in this snapshot. Carried forward
-        # from the previous manifest (``carry_stats``) so each commit
-        # footer-walks ONLY its new dir; dirs absent from the carry
-        # (pre-stats manifests) are walked once and propagate. The
-        # same walk records each new dir's read schema, which every
-        # later read passes to ``.schema(...)`` instead of running a
-        # schema-inference job; dirs of older manifests have none and
-        # stay on inference.
-        carry = carry_stats or {}
-        carry_f = carry_files or {}
-        carry_s = carry_schemas or {}
+        # from ``base`` so each commit footer-walks ONLY its new dir;
+        # dirs absent from the carry (pre-stats manifests) are walked
+        # once and propagate. The same walk records each new dir's
+        # read schema, which every later read passes to
+        # ``.schema(...)`` instead of running a schema-inference job;
+        # dirs of older manifests have none and stay on inference.
+        base = base or {}
+        carry = base.get("dir_stats") or {}
+        carry_f = base.get("file_stats") or {}
+        carry_s = base.get("dir_schemas") or {}
         dir_stats = {}
         file_stats = {}
         dir_schemas = {}
@@ -1494,7 +1514,7 @@ class VersionedTable:
             self.bloom_columns() if version > 0 else []
         )
         if bcols:
-            carry_b = carry_blooms or {}
+            carry_b = base.get("dir_blooms") or {}
             dir_blooms = {}
             for d in dirs:
                 if d in carry_b:
@@ -1514,11 +1534,14 @@ class VersionedTable:
             manifest["cdf_dir"], cdf_schema = feed
             if cdf_schema is not None:
                 manifest["cdf_schema"] = cdf_schema
+        # live deletion vectors: [{"dir": tombstone parquet dir,
+        # "deleted": {data dir: rows removed}}] — reads anti-join each
+        # entry against exactly the dirs in its "deleted" scope; a
+        # rewritten dir's scope drops with it (see _carry_dvs)
+        dvs = self._carry_dvs(base, dirs) or []
+        if dv:
+            dvs.append(dv)
         if dvs:
-            # live deletion vectors: [{"dir": tombstone parquet dir,
-            # "deleted": {data dir: rows removed}}] — reads anti-join
-            # each entry against exactly the dirs in its "deleted"
-            # scope; compaction materializes entries away
             manifest["dvs"] = dvs
         os.makedirs(self._mdir, exist_ok=True)
         # transaction fencing (r13 verdict #4): a PREPARED version from
@@ -2003,8 +2026,8 @@ class VersionedTable:
         face barriers like any non-append."""
         spark = _active_spark()
         cols = list(cols or [])
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             have = self.partition_columns(cur["version"])
             if cols == have:
                 raise ValueError(
@@ -2029,22 +2052,9 @@ class VersionedTable:
                 "schema_evolved": True,
                 "schema_json": snap.json(),
             }
-            try:
-                return self._commit(
-                    cur["data_dirs"],
-                    "set_partitioning",
-                    cur["version"] + 1,
-                    m,
-                    num_rows=self.row_count(cur["version"]),
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=cur.get("dvs"),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit_metadata(cur, "set_partitioning", m)
+
+        return self._retry_commit(_attempt)
 
     def append(
         self,
@@ -2173,21 +2183,11 @@ class VersionedTable:
         # REASSIGNS and rewrites (the first dir orphans; vacuum
         # sweeps it) — two racing appends can never mint the same id.
         d = self._write_data(df, self.partition_columns() or None)
-        for attempt in range(self.max_retries + 1):
-            v = cur["version"] + 1
-            try:
-                return self._commit(
-                    cur["data_dirs"] + [d], "append", v, m or None,
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=cur.get("dvs"),  # deleted rows stay deleted
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
-                cur = self._read_manifest()
+        first = cur
+
+        def _attempt(cur):
+            nonlocal d, df, hw, new_hw, checked_constraints
+            if cur is not first:
                 if ident:
                     won_hw = self._identity_highwater(cur)
                     if won_hw != hw:
@@ -2226,6 +2226,13 @@ class VersionedTable:
                 if now != checked_constraints:
                     self._enforce_constraints(df, now)
                     checked_constraints = now
+            # deleted rows stay deleted: the base's DVs carry over
+            return self._commit(
+                cur["data_dirs"] + [d], "append", cur["version"] + 1,
+                m or None, base=cur,
+            )
+
+        return self._retry_commit(_attempt, cur)
 
     def _write_commit(
         self, tagged: DataFrame, partition_by: list[str] | None
@@ -3333,10 +3340,10 @@ class VersionedTable:
             updates = self._apply_generated(updates, computable)
         bounds, n = self._key_bounds(updates, keys)
         upd_keys = self._small_side(updates.select(*keys), n)
-        for attempt in range(self.max_retries + 1):
+
+        def _attempt(cur):
             from pyspark.sql.types import StructType
 
-            cur = self._read_manifest()
             evolved, _wj, _renames, _drops, _cons, _pby = self._evolution_state(
                 cur["version"]
             )
@@ -3540,23 +3547,17 @@ class VersionedTable:
                 new_dirs = [d]
             total = sum(self._logical_dir_rows(cur, u) for u in untouched)
             total += self._dir_rows(d) if d is not None else 0
-            try:
-                return self._commit(
-                    new_dirs,
-                    "merge",
-                    v,
-                    m or None,
-                    num_rows=total,
-                    feed=feed,
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=self._carry_dvs(cur, untouched),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit(
+                new_dirs,
+                "merge",
+                v,
+                m or None,
+                num_rows=total,
+                feed=feed,
+                base=cur,
+            )
+
+        return self._retry_commit(_attempt)
 
     def overwrite(
         self,
@@ -3606,14 +3607,15 @@ class VersionedTable:
         df = self._apply_generated(df, self.generated_columns())
         self._enforce_constraints(df, self.constraints(cur["version"]))
         d = self._write_data(df, self.partition_columns() or None)
-        for attempt in range(self.max_retries + 1):
-            v = cur["version"] + 1
-            try:
-                return self._commit([d], "overwrite", v, meta)
-            except CommitConflictError:
-                if not retry_conflict or attempt == self.max_retries:
-                    raise
-                cur = self._read_manifest()
+
+        def _attempt(cur):
+            return self._commit(
+                [d], "overwrite", cur["version"] + 1, meta, base=cur
+            )
+
+        if not retry_conflict:
+            return _attempt(cur)
+        return self._retry_commit(_attempt, cur)
 
     def compact(
         self,
@@ -3646,38 +3648,80 @@ class VersionedTable:
         and a predicate on ANY of them prunes — a lexicographic
         ``sort_by=[a, b]`` gives perfect pruning on ``a`` and none on
         ``b``. Same single shuffle as ``sort_by``."""
-        spark = spark or _active_spark()
+        return self._rewrite_dirs(
+            spark, "compact", lambda cur: cur["data_dirs"],
+            sort_by, zorder_by, n_files,
+        )
+
+    def _rewrite_dirs(
+        self,
+        spark: SparkSession | None,
+        op: str,
+        pick,
+        sort_by: list[str] | None = None,
+        zorder_by: list[str] | None = None,
+        n_files: int | None = None,
+    ) -> int | None:
+        """The one dir-rewrite routine behind :meth:`compact`,
+        :meth:`compact_bins`, :meth:`compact_tail` and DV
+        materialization: ``pick(cur)`` names the dirs to rewrite
+        (none: nothing to do, returns None); they are read with
+        deletion vectors applied, optionally clustered (``sort_by``
+        range-partitions into ``n_files``, default 8, and sorts
+        within; ``zorder_by`` orders on the bit-interleaved
+        quantile-bucket code of operators/layout.zorder_quantile),
+        written as ONE new dir, and committed as ``op`` with every
+        other dir carried by reference and the full snapshot row
+        count. The head's meta carries over with its clustering
+        provenance (``clustered_by``, which lets optimize() skip
+        re-clustering its own output) replaced by this rewrite's
+        clustering — stripped when it has none. Conflict retry
+        re-picks against the winner's snapshot."""
         if sort_by and zorder_by:
             raise ValueError("pass sort_by OR zorder_by, not both")
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
-            base = self.read(spark, cur["version"])
+        spark = spark or _active_spark()
+
+        def _attempt(cur):
+            hit = pick(cur)
+            if not hit:
+                return None
+            keep = [d for d in cur["data_dirs"] if d not in hit]
+            df = self._read_snapshot_subset(spark, cur, hit)
             if zorder_by:
                 from python_etl_spark.operators.layout import (
                     zorder_quantile,
                 )
 
-                base = zorder_quantile(base, zorder_by, n_files or 8)
+                df = zorder_quantile(df, zorder_by, n_files or 8)
             elif sort_by:
-                base = base.repartitionByRange(
+                df = df.repartitionByRange(
                     n_files or 8, *sort_by
                 ).sortWithinPartitions(*sort_by)
-            v = cur["version"] + 1
-            d = self._write_data(base, self.partition_columns() or None)
-            # clustering provenance: optimize() skips re-clustering a
-            # snapshot that IS the output of this exact clustering —
-            # per-column overlap of a multi-dim Z layout never reaches
-            # a single-sort's near-zero, so the raw observable alone
-            # would re-trigger every night on an unchanged table
+            nd = self._write_data(df, self.partition_columns() or None)
+            if not self._has_parquet(nd):
+                # the rewritten dirs held no live row: drop the
+                # file-less dir, or keep one schema-carrying file
+                # when no other dir remains to read
+                nd = None if keep else self._write_data(df.repartition(1))
+            total = sum(self._logical_dir_rows(cur, d) for d in keep)
+            total += self._dir_rows(nd) if nd else 0
+            # provenance, not the overlap observable, tells optimize()
+            # a snapshot is already clustered: a multi-dim Z layout's
+            # per-column overlap never reaches a single sort's near-zero
             m = dict(cur.get("meta") or {})
             m.pop("clustered_by", None)
             if zorder_by or sort_by:
                 m["clustered_by"] = list(zorder_by or sort_by)
-            try:
-                return self._commit([d], "compact", v, m or None)
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit(
+                keep + ([nd] if nd else []),
+                op,
+                cur["version"] + 1,
+                m or None,
+                num_rows=total,
+                base=cur,
+            )
+
+        return self._retry_commit(_attempt)
 
     def restore(self, version: int) -> int:
         """RESTORE the table to an old snapshot (the Delta RESTORE
@@ -3689,25 +3733,17 @@ class VersionedTable:
         re-baseline from the restored snapshot."""
         old = self._read_manifest(version)
         rows = self.row_count(version)
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
-            v = cur["version"] + 1
-            try:
-                return self._commit(
-                    old["data_dirs"],
-                    "restore",
-                    v,
-                    meta={"restored_from": version},
-                    num_rows=rows,
-                    carry_stats=old.get("dir_stats"),
-                    dvs=old.get("dvs"),  # the old snapshot's tombstones
-                    carry_blooms=old.get("dir_blooms"),
-                    carry_schemas=old.get("dir_schemas"),
-                    carry_files=old.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+        # the old snapshot's records, tombstones included, come back
+        return self._retry_commit(
+            lambda cur: self._commit(
+                old["data_dirs"],
+                "restore",
+                cur["version"] + 1,
+                meta={"restored_from": version},
+                num_rows=rows,
+                base=old,
+            )
+        )
 
     def clone(
         self, dest_root: str, version: int | None = None
@@ -3790,11 +3826,7 @@ class VersionedTable:
                 0,
                 m,
                 num_rows=self.row_count(v),
-                carry_stats=src.get("dir_stats"),
-                dvs=src.get("dvs"),
-                carry_blooms=src.get("dir_blooms"),
-                carry_schemas=src.get("dir_schemas"),
-                carry_files=src.get("file_stats"),
+                base=src,
             )
         except CommitConflictError:
             raise RuntimeError(
@@ -3995,44 +4027,17 @@ class VersionedTable:
         its manifest carries the FULL snapshot row count, so
         ``row_count()`` uses it as a base. Conflict retry recomputes
         against the winner's snapshot."""
-        spark = spark or _active_spark()
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
-            dirs = cur["data_dirs"]
-            small = [d for d in dirs if self._tree_bytes(d) < small_bytes]
-            if len(small) < 2:
-                return None
-            keep = [d for d in dirs if d not in small]
-            # DV-applied read: tombstoned rows in the packed dirs are
-            # materialized away, their DV scope drops with the dirs
-            df = self._read_snapshot_subset(spark, cur, small)
-            v = cur["version"] + 1
-            nd = self._write_data(df, self.partition_columns() or None)
-            total = sum(
-                self._logical_dir_rows(cur, d) for d in keep
-            ) + self._dir_rows(nd)
-            # the bin-pack rewrites its dirs UNCLUSTERED: clustering
-            # provenance no longer describes the snapshot — strip it
-            # so the optimize() planner re-measures instead of
-            # wrongly skipping
-            bm = dict(cur.get("meta") or {})
-            bm.pop("clustered_by", None)
-            try:
-                return self._commit(
-                    keep + [nd],
-                    "compact_bins",
-                    v,
-                    bm or None,
-                    num_rows=total,
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=self._carry_dvs(cur, keep),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+
+        def _small(cur):
+            small = [
+                d for d in cur["data_dirs"]
+                if self._tree_bytes(d) < small_bytes
+            ]
+            return small if len(small) >= 2 else None
+
+        # the bin-pack rewrites its dirs UNCLUSTERED, so the clustering
+        # provenance drops and the optimize() planner re-measures
+        return self._rewrite_dirs(spark, "compact_bins", _small)
 
     def compact_tail(
         self,
@@ -4053,52 +4058,18 @@ class VersionedTable:
         Commits as op ``compact_bins`` (row-preserving partial) with
         clustering provenance restored in the meta, so the optimize()
         planner recognizes the snapshot as clustered. No-op (None)
-        when nothing landed since."""
-        spark = spark or _active_spark()
+        when nothing landed since. ``zorder_by`` / ``sort_by`` /
+        ``n_files`` cluster as in :meth:`compact`; both knobs at once
+        raise."""
         base = set(self._read_manifest(since_version)["data_dirs"])
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
-            tail = [d for d in cur["data_dirs"] if d not in base]
-            if not tail:
-                return None
-            keep = [d for d in cur["data_dirs"] if d in base]
-            df = self._read_snapshot_subset(spark, cur, tail)
-            if zorder_by:
-                from python_etl_spark.operators.layout import (
-                    zorder_quantile,
-                )
-
-                df = zorder_quantile(df, zorder_by, n_files or 8)
-            elif sort_by:
-                df = df.repartitionByRange(
-                    n_files or 8, *sort_by
-                ).sortWithinPartitions(*sort_by)
-            v = cur["version"] + 1
-            nd = self._write_data(df, self.partition_columns() or None)
-            if not self._has_parquet(nd):
-                nd = None
-            new_dirs = keep + ([nd] if nd else [])
-            total = sum(self._logical_dir_rows(cur, d) for d in keep)
-            total += self._dir_rows(nd) if nd else 0
-            tm = dict(cur.get("meta") or {})
-            if zorder_by or sort_by:
-                tm["clustered_by"] = list(zorder_by or sort_by)
-            try:
-                return self._commit(
-                    new_dirs,
-                    "compact_bins",
-                    v,
-                    tm or None,
-                    num_rows=total,
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=self._carry_dvs(cur, keep),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+        return self._rewrite_dirs(
+            spark,
+            "compact_bins",
+            lambda cur: [d for d in cur["data_dirs"] if d not in base],
+            sort_by,
+            zorder_by,
+            n_files,
+        )
 
     def _materialize_dvs(self, spark: SparkSession | None = None) -> int | None:
         """Rewrite ONLY the dirs that have deletion vectors applied
@@ -4107,47 +4078,15 @@ class VersionedTable:
         scopes. Row-preserving (logical rows unchanged), so it commits
         as a ``compact_bins`` op — change feeds are unaffected. No-op
         (None) when no DVs exist."""
-        spark = spark or _active_spark()
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
-            dvs = cur.get("dvs", [])
-            hit = [
+
+        def _dv_hit(cur):
+            return [
                 d
                 for d in cur["data_dirs"]
-                if any(d in e["deleted"] for e in dvs)
+                if any(d in e["deleted"] for e in cur.get("dvs", []))
             ]
-            if not hit:
-                return None
-            keep = [d for d in cur["data_dirs"] if d not in hit]
-            df = self._read_snapshot_subset(spark, cur, hit)
-            v = cur["version"] + 1
-            nd = self._write_data(df, self.partition_columns() or None)
-            if not self._has_parquet(nd):
-                nd = None
-            new_dirs = keep + ([nd] if nd else [])
-            if not new_dirs:
-                nd = self._write_data(df.repartition(1))
-                new_dirs = [nd]
-            total = sum(self._logical_dir_rows(cur, d) for d in keep)
-            total += self._dir_rows(nd) if nd else 0
-            dm = dict(cur.get("meta") or {})
-            dm.pop("clustered_by", None)  # rewrite is unclustered
-            try:
-                return self._commit(
-                    new_dirs,
-                    "compact_bins",
-                    v,
-                    dm or None,
-                    num_rows=total,
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=self._carry_dvs(cur, keep),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+
+        return self._rewrite_dirs(spark, "compact_bins", _dv_hit)
 
     def _clustering_overlap(self, manifest: dict, col: str) -> float | None:
         """Clustering quality from footer ranges, METADATA-ONLY: the
@@ -4254,21 +4193,22 @@ class VersionedTable:
                     )
         if cluster_by is None:
             cluster_by = self.cluster_keys() or None
+        ccols = (
+            [cluster_by] if isinstance(cluster_by, str)
+            else list(cluster_by or [])
+        )
+        # one column -> range sort; several -> Z-order
+        ckw = {"zorder_by" if len(ccols) > 1 else "sort_by": ccols}
+        cact = "compact_zorder" if len(ccols) > 1 else "compact_clustered"
         if cluster_by:
-            # one column -> range sort; several -> Z-order (the worst
-            # column's overlap decides: a layout is only as good as
-            # the dimension reads actually filter on). Three-way:
+            # the worst column's overlap decides (a layout is only as
+            # good as the dimension reads actually filter on). Three-way:
             # (a) the head commit IS this clustering's output -> no-op;
             # (b) a clustered base exists and only appends/metadata
             #     landed since -> INCREMENTAL: cluster just the tail
             #     dirs (nightly cost, never the corpus);
             # (c) otherwise -> full clustered rewrite when the overlap
             #     observable passes the threshold.
-            ccols = (
-                [cluster_by]
-                if isinstance(cluster_by, str)
-                else list(cluster_by)
-            )
             cur = self._read_manifest()
             already = cur.get("meta", {}).get("clustered_by") == ccols
             base_v = None
@@ -4291,12 +4231,7 @@ class VersionedTable:
             if already:
                 pass
             elif base_v is not None:
-                kw = (
-                    {"zorder_by": ccols}
-                    if len(ccols) > 1
-                    else {"sort_by": ccols}
-                )
-                v = self.compact_tail(base_v, spark, **kw)
+                v = self.compact_tail(base_v, spark, **ckw)
                 if v is not None:
                     actions.append(
                         {
@@ -4317,17 +4252,10 @@ class VersionedTable:
                 }
                 if known and max(known.values()) >= overlap_threshold:
                     worst = max(known, key=known.get)
-                    if len(ccols) == 1:
-                        v = self.compact(spark, sort_by=ccols)
-                    else:
-                        v = self.compact(spark, zorder_by=ccols)
+                    v = self.compact(spark, **ckw)
                     actions.append(
                         {
-                            "action": (
-                                "compact_clustered"
-                                if len(ccols) == 1
-                                else "compact_zorder"
-                            ),
+                            "action": cact,
                             "version": v,
                             "reason": (
                                 f"{known[worst]:.0%} of file pairs "
@@ -4372,20 +4300,8 @@ class VersionedTable:
             # re-consolidates to one dir — amortized full-rewrite
             # cost, provenance preserved); plain compact otherwise
             if head_clustered:
-                ccols2 = (
-                    [cluster_by]
-                    if isinstance(cluster_by, str)
-                    else list(cluster_by)
-                )
-                if len(ccols2) == 1:
-                    v = self.compact(spark, sort_by=ccols2)
-                else:
-                    v = self.compact(spark, zorder_by=ccols2)
-                act = (
-                    "compact_clustered"
-                    if len(ccols2) == 1
-                    else "compact_zorder"
-                )
+                v = self.compact(spark, **ckw)
+                act = cact
             else:
                 v = self.compact(spark)
                 act = "compact"
@@ -4548,8 +4464,8 @@ class VersionedTable:
             raise ValueError(
                 "key_cols applies to merge_on_read=True deletes only"
             )
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             evolved = self._evolution_state(cur["version"])[0]
             dirs = cur["data_dirs"]
             hits = self._mutation_probe(spark, cur, _match, bounds)
@@ -4604,22 +4520,11 @@ class VersionedTable:
                 # empty frame, and an empty/absent dir list bricks
                 # every later read with UNABLE_TO_INFER_SCHEMA)
                 new_dirs.append(self._write_data(kept.repartition(1)))
-            try:
-                return self._commit(
-                    new_dirs,
-                    "delete",
-                    v,
-                    num_rows=total,
-                    feed=feed,
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=self._carry_dvs(cur, untouched),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit(
+                new_dirs, "delete", v, num_rows=total, feed=feed, base=cur
+            )
+
+        return self._retry_commit(_attempt)
 
     def _delete_mor(
         self,
@@ -4635,8 +4540,8 @@ class VersionedTable:
         re-emits a change row. ``match`` is the matcher callable
         delete_where built (predicate where() or key-frame semi
         join)."""
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             dirs = cur["data_dirs"]
             v = cur["version"] + 1
             tagged = self._read_snapshot_subset(
@@ -4652,7 +4557,7 @@ class VersionedTable:
                     .collect()
                 }
                 n_matched = sum(per_dir.values())
-                dvs = list(cur.get("dvs", []))
+                entry = None
                 if per_dir:
                     # key-column tombstones when the caller declares
                     # row-identifying keys; full-row values otherwise —
@@ -4668,7 +4573,6 @@ class VersionedTable:
                     )
                     if dv_schema is not None:
                         entry["schema"] = dv_schema
-                    dvs.append(entry)
                 feed = None
                 if track_changes and per_dir:
                     # every row a change, none data: no data dir comes out
@@ -4681,24 +4585,19 @@ class VersionedTable:
                 elif track_changes:
                     feed = self._empty_feed()
                 total = self.row_count(cur["version"]) - n_matched
-                try:
-                    return self._commit(
-                        dirs,
-                        "delete_mor",
-                        v,
-                        num_rows=total,
-                        feed=feed,
-                        carry_stats=cur.get("dir_stats"),
-                        dvs=dvs or None,
-                        carry_blooms=cur.get("dir_blooms"),
-                        carry_schemas=cur.get("dir_schemas"),
-                        carry_files=cur.get("file_stats"),
-                    )
-                except CommitConflictError:
-                    if attempt == self.max_retries:
-                        raise
+                return self._commit(
+                    dirs,
+                    "delete_mor",
+                    v,
+                    num_rows=total,
+                    feed=feed,
+                    base=cur,
+                    dv=entry,
+                )
             finally:
                 matched.unpersist()
+
+        return self._retry_commit(_attempt)
 
     def update_where(
         self,
@@ -4760,8 +4659,8 @@ class VersionedTable:
                 for c in assignments
             )
         }
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             evolved = self._evolution_state(cur["version"])[0]
             dirs = cur["data_dirs"]
             snap_schema = self.read(spark, cur["version"]).schema
@@ -4866,22 +4765,11 @@ class VersionedTable:
                 new_dirs.append(
                     self._write_data(updated.drop("__fired").repartition(1))
                 )
-            try:
-                return self._commit(
-                    new_dirs,
-                    "update",
-                    v,
-                    num_rows=total,
-                    feed=feed,
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=self._carry_dvs(cur, untouched),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit(
+                new_dirs, "update", v, num_rows=total, feed=feed, base=cur
+            )
+
+        return self._retry_commit(_attempt)
 
     def add_column(self, name: str, dtype) -> int:
         """ADD a nullable column as a METADATA-ONLY commit (the Delta
@@ -4907,8 +4795,8 @@ class VersionedTable:
             dt = dtype
         else:
             dt = StructType.fromDDL(f"`{name}` {dtype}").fields[0].dataType
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             snap = self.read(spark, cur["version"]).schema
             if name in snap.fieldNames():
                 raise ValueError(f"column '{name}' already exists")
@@ -4922,22 +4810,9 @@ class VersionedTable:
                 list(snap.fields) + [StructField(name, dt, True)]
             )
             m = {"schema_evolved": True, "schema_json": target.json()}
-            try:
-                return self._commit(
-                    cur["data_dirs"],
-                    "add_column",
-                    cur["version"] + 1,
-                    m,
-                    num_rows=self.row_count(cur["version"]),
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=cur.get("dvs"),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit_metadata(cur, "add_column", m)
+
+        return self._retry_commit(_attempt)
 
     def rename_column(self, old: str, new: str) -> int:
         """RENAME a column as a METADATA-ONLY commit (r10 verdict #3 —
@@ -4963,8 +4838,8 @@ class VersionedTable:
                 f"cannot rename hive partition column '{old}' — its "
                 f"name is baked into every data path"
             )
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             names = self.read(spark, cur["version"]).columns
             if old not in names:
                 raise ValueError(f"no column '{old}' to rename")
@@ -5001,6 +4876,8 @@ class VersionedTable:
                         for f in target.fields
                     ]
                 ).json()
+            # the one commit that edits carried records: stats re-key
+            # to the new name
             carry = {
                 d: {new if c == old else c: v for c, v in st.items()}
                 for d, st in (cur.get("dir_stats") or {}).items()
@@ -5018,22 +4895,14 @@ class VersionedTable:
                 }
                 for d, fs in (cur.get("file_stats") or {}).items()
             }
-            try:
-                return self._commit(
-                    cur["data_dirs"],
-                    "rename",
-                    cur["version"] + 1,
-                    m,
-                    num_rows=self.row_count(cur["version"]),
-                    carry_stats=carry,
-                    dvs=cur.get("dvs"),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=carry_f,
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit_metadata(
+                cur,
+                "rename",
+                m,
+                base={**cur, "dir_stats": carry, "file_stats": carry_f},
+            )
+
+        return self._retry_commit(_attempt)
 
     def drop_column(self, name: str) -> int:
         """DROP a column as a METADATA-ONLY commit (the rename's
@@ -5064,8 +4933,8 @@ class VersionedTable:
                 f"cannot drop '{name}': involved in generated "
                 f"column(s) {grefs}"
             )
-        for attempt in range(self.max_retries + 1):
-            cur = self._read_manifest()
+
+        def _attempt(cur):
             names = self.read(spark, cur["version"]).columns
             if name not in names:
                 raise ValueError(f"no column '{name}' to drop")
@@ -5103,22 +4972,9 @@ class VersionedTable:
                 m["schema_json"] = StructType(
                     [f for f in target.fields if f.name != name]
                 ).json()
-            try:
-                return self._commit(
-                    cur["data_dirs"],
-                    "drop",
-                    cur["version"] + 1,
-                    m,
-                    num_rows=self.row_count(cur["version"]),
-                    carry_stats=cur.get("dir_stats"),
-                    dvs=cur.get("dvs"),
-                    carry_blooms=cur.get("dir_blooms"),
-                    carry_schemas=cur.get("dir_schemas"),
-                    carry_files=cur.get("file_stats"),
-                )
-            except CommitConflictError:
-                if attempt == self.max_retries:
-                    raise
+            return self._commit_metadata(cur, "drop", m)
+
+        return self._retry_commit(_attempt)
 
     def snapshot_diff(
         self, spark: SparkSession, since_version: int,

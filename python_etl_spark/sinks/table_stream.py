@@ -401,26 +401,15 @@ def _commit_files(
         op_meta["schema_evolved"] = True
         if schema_json is not None:
             op_meta["schema_json"] = schema_json
-    for attempt in range(t.max_retries + 1):
-        cur = t._read_manifest()
-        v = cur["version"] + 1
-        try:
-            if overwrite:
-                return t._commit([d], "overwrite", v, op_meta)
-            return t._commit(
-                cur["data_dirs"] + [d],
-                "append",
-                v,
-                op_meta,
-                carry_stats=cur.get("dir_stats"),
-                dvs=cur.get("dvs"),
-                carry_blooms=cur.get("dir_blooms"),
-                carry_schemas=cur.get("dir_schemas"),
-                carry_files=cur.get("file_stats"),
-            )
-        except CommitConflictError:
-            if attempt == t.max_retries:
-                raise
+    return t._retry_commit(
+        lambda cur: t._commit(
+            [d] if overwrite else cur["data_dirs"] + [d],
+            "overwrite" if overwrite else "append",
+            cur["version"] + 1,
+            op_meta,
+            base=cur,
+        )
+    )
 
 
 def _resolve_part_cols(root: str, options) -> list | None:

@@ -3,6 +3,8 @@ equal to the logical upsert, time travel, delete, vacuum."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1228,19 +1230,23 @@ def test_merge_clauses_operator_semantics(spark):
         [(2, "B", 99), (3, "C", 1), (4, "D", 999), (5, "E", 50), (6, "F", 60)],
         "k long, g string, v long",
     )
-    m, a = merge_clauses(
-        base,
-        upd,
-        ["k"],
+    clauses = dict(
         matched_update="s.v > t.v",
         matched_delete="t.k = 4",  # delete clause FIRST: k=4 dies even
         not_matched_insert="s.k % 2 = 1",  # though 999 > 40
-        return_actions=True,
     )
+    m = merge_clauses(base, upd, ["k"], **clauses)
     assert _rows(m) == [(1, "a", 10), (2, "B", 99), (3, "c", 30), (5, "E", 50)]
-    assert sorted((r["k"], r["action"]) for r in a.collect()) == [
-        (2, "update"), (4, "delete"), (5, "insert"), (6, "skip"),
+    # the same join tags each clause's outcome: k=3 (update condition
+    # missed) and k=6 (insert condition missed) raise no change row
+    tagged = merge_clauses(base, upd, ["k"], change_col="ct", **clauses)
+    assert sorted(
+        (r["k"], r["ct"]) for r in tagged.collect() if r["ct"] != "data"
+    ) == [
+        (2, "update_postimage"), (2, "update_preimage"),
+        (4, "delete"), (5, "insert"),
     ]
+    assert _rows(tagged.where("ct = 'data'").drop("ct")) == _rows(m)
     # a delete-only MERGE touches nothing else (insert clause off;
     # the standalone operator's default inserts unmatched sources)
     only_del = merge_clauses(
@@ -2307,6 +2313,8 @@ def test_zorder_compact_multi_dim_pruning(spark, tmp_path):
         )
     with pytest.raises(ValueError, match="not both"):
         zt.compact(spark, sort_by=["k"], zorder_by=["k", "c"])
+    with pytest.raises(ValueError, match="not both"):
+        zt.compact_tail(0, spark, sort_by=["k"], zorder_by=["k", "c"])
 
 
 def test_optimize_zorder_trigger(spark, tmp_path):
@@ -6074,6 +6082,99 @@ def test_commit_and_read_job_budgets(spark, tmp_path):
     }
     assert t.row_count() == 5000 + 10 - 20
     assert t.read(spark).count() == t.row_count()
+    # an append writes its batch (one job); a sort_by compact samples
+    # the range bounds and writes
+    batch = spark.range(9100, 9200).selectExpr(
+        "id AS k", "id % 7 AS g", "CAST(id AS double) AS v"
+    )
+    _, n = _jobs(spark, lambda: t.append(batch))
+    assert n == 1, n
+    _, n = _jobs(spark, lambda: t.compact(spark, sort_by=["k"]))
+    assert n == 4, n
+    assert t.read(spark).count() == t.row_count() == 5090
+
+
+_RECORDS = ("dir_stats", "file_stats", "dir_schemas", "dir_blooms")
+
+
+def _dv_scope(m, d):
+    return {e["dir"]: e["deleted"][d] for e in m.get("dvs", [])
+            if d in e["deleted"]}
+
+
+def _assert_carried(base, new, renamed=None):
+    """Every dir ``new`` keeps from ``base`` has ``base``'s per-dir
+    records and DV scope; only a merge-on-read delete adds a scope
+    entry, and only a rename re-keys stats (``renamed``: old, new)."""
+    shared = set(base["data_dirs"]) & set(new["data_dirs"])
+    assert shared
+    added = {e["dir"] for e in new.get("dvs", [])} - {
+        e["dir"] for e in base.get("dvs", [])
+    }
+    assert not added or new["op"] == "delete_mor"
+    for d in shared:
+        for key in _RECORDS:
+            want = (base.get(key) or {}).get(d)
+            if renamed and key in ("dir_stats", "file_stats"):
+                want = json.loads(
+                    json.dumps(want).replace(
+                        f'"{renamed[0]}":', f'"{renamed[1]}":'
+                    )
+                )
+            assert (new.get(key) or {}).get(d) == want, (new["op"], key, d)
+        scope = _dv_scope(new, d)
+        assert {k: n for k, n in scope.items() if k not in added} == (
+            _dv_scope(base, d)
+        ), (new["op"], d)
+
+
+def test_commits_carry_per_dir_records_from_their_base(spark, tmp_path):
+    """The commit protocol's carry rule, op by op: each commit keeps,
+    for every dir it shares with the manifest it was planned on, that
+    manifest's stats, file stats, read schema, bloom and DV scope."""
+    from python_etl_spark.sinks.table_stream import VersionedTableDataSource
+
+    def rows(lo, hi, v="v"):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", f"CAST(id AS double) AS {v}"
+        )
+
+    t = VersionedTable(str(tmp_path / "t"))
+    t.create(rows(0, 400), bloom_keys=["k"])
+
+    def step(fn, renamed=None):
+        base = t._read_manifest()
+        fn()
+        _assert_carried(base, t._read_manifest(), renamed)
+
+    step(lambda: t.append(rows(400, 420)))
+    step(lambda: t.append(rows(420, 440)))
+    step(lambda: t.merge(rows(425, 428), keys=["k"]))
+    step(lambda: t.delete_where(F.col("k") == 430))
+    step(lambda: t.update_where({"v": "v + 1"}, "k = 410"))
+    # tombstones in the first dir and in the newest one
+    step(lambda: t.delete_keys(
+        spark.createDataFrame([(1,), (415,)], "k long"), merge_on_read=True
+    ))
+    mor = t.latest_version()
+    step(lambda: t.add_column("x", "bigint"))
+    step(lambda: t.rename_column("v", "w"), renamed=("v", "w"))
+    step(lambda: t.drop_column("x"))
+    spark.dataSource.register(VersionedTableDataSource)
+    step(lambda: rows(440, 450, "w").write.format("versioned_table")
+         .option("path", t.root).mode("append").save())
+    clustered = t.latest_version()
+    step(lambda: t.append(rows(450, 460, "w")))
+    step(lambda: t.compact_tail(clustered, spark, sort_by=["k"]))
+    big = max(t._tree_bytes(d) for d in t._read_manifest()["data_dirs"])
+    step(lambda: t.compact_bins(spark, small_bytes=big))
+    step(lambda: t.optimize(spark, small_bytes=1, max_dirs=64, dv_ratio=0.0))
+    restored = t._read_manifest(mor)
+    t.restore(mor)
+    _assert_carried(restored, t._read_manifest())
+    c = t.clone(str(tmp_path / "c"))
+    _assert_carried(t._read_manifest(), c._read_manifest())
+    assert _rows(c.read(spark)) == _rows(t.read(spark))
 
 
 def _assert_recorded_schemas(spark, t):
