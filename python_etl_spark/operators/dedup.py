@@ -45,8 +45,8 @@ def _spread_task_bytes() -> int:
     return env_int("SPARK_GRAFT_SPREAD_TASK_BYTES", 96 * 1024)
 
 
-# (applicationId, analyzed-plan semanticHash, source fingerprint) ->
-# target partition count (0 = leave the source partitioning alone).
+# (applicationId, analyzed-plan semanticHash, source fingerprint, task
+# bytes) -> target partition count (0 = leave the source partitioning alone).
 # docs.rdd.getNumPartitions() forces a full physical planning pass and
 # .stats() an optimize pass (~35+80 ms py4j+Catalyst) on EVERY query
 # construction; the answer is a pure function of (plan, backing files)
@@ -64,31 +64,29 @@ def _spread(docs: DataFrame) -> DataFrame:
     capped at the session's parallelism — so tiny corpora get a few
     fat tasks instead of a per-core fan-out, and the count grows with
     the data until the cap."""
+    from python_etl_spark.frames import estimated_bytes
     from python_etl_spark.sources.tables import source_fingerprint
 
     sc = docs.sparkSession.sparkContext
+    task_bytes = _spread_task_bytes()
     try:
         key = (
             sc.applicationId,
             docs._jdf.queryExecution().analyzed().semanticHash(),
             source_fingerprint(docs),
+            task_bytes,
         )
         target = _NPART_MEMO.get(key)
     except Exception:  # pragma: no cover - py4j surface drift
         key, target = None, None
     if target is None:
         n_src = docs.rdd.getNumPartitions()
-        try:
-            est = int(
-                docs._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes().toString()
-            )
-            want = min(
-                sc.defaultParallelism,
-                max(1, -(-est // _spread_task_bytes())),
-            )
-        except Exception:  # no stats: fall back to the core count
-            want = sc.defaultParallelism
+        est = estimated_bytes(docs)
+        want = (
+            sc.defaultParallelism  # no stats: fall back to the core count
+            if est is None
+            else min(sc.defaultParallelism, max(1, -(-est // task_bytes)))
+        )
         target = 0 if n_src >= want else want
         if key is not None:
             if len(_NPART_MEMO) > 4096:

@@ -71,21 +71,6 @@ def stable_digest(s: str, n: int = 8) -> str:
 #   plan-statistics estimate.
 
 
-def _parse_size_bytes(s: str) -> int:
-    s = s.strip().lower()
-    mult = 1
-    for suf, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("t", 1024**4),
-        ("b", 1),
-    ):
-        if s.endswith(suf):
-            s = s[: -len(suf)]
-            mult = m
-            break
-    return int(float(s)) * mult
-
-
 # (applicationId, analyzed-plan semanticHash, source fingerprint,
 # threshold) -> hint?
 # The .stats() probe runs a full Catalyst analyze+optimize pass on the
@@ -110,32 +95,24 @@ def bc_dim(df: DataFrame) -> DataFrame:
     runtime sizes. At test SFs customer/part/supplier estimate in the
     low MBs, so plans are unchanged; at 100 TB the same code degrades
     to a shuffle join instead of a driver OOM."""
-    try:
-        thr = _parse_size_bytes(
-            df.sparkSession.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760b"
-            )
-        )
-        from python_etl_spark.sources.tables import source_fingerprint
+    from python_etl_spark.frames import broadcast_threshold, fits_broadcast
+    from python_etl_spark.sources.tables import source_fingerprint
 
+    try:
         key = (
             df.sparkSession.sparkContext.applicationId,
             df._jdf.queryExecution().analyzed().semanticHash(),
             source_fingerprint(df),
-            thr,
+            broadcast_threshold(df.sparkSession),
         )
-        hint = _BC_DIM_MEMO.get(key)
-        if hint is None:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes().toString()
-            )
-            hint = 0 < est <= thr
-            if len(_BC_DIM_MEMO) > 4096:  # bound against key churn
-                _BC_DIM_MEMO.clear()
-            _BC_DIM_MEMO[key] = hint
-    except Exception:
+    except Exception:  # pragma: no cover - py4j surface drift
         return df
+    hint = _BC_DIM_MEMO.get(key)
+    if hint is None:
+        hint = fits_broadcast(df)
+        if len(_BC_DIM_MEMO) > 4096:  # bound against key churn
+            _BC_DIM_MEMO.clear()
+        _BC_DIM_MEMO[key] = hint
     if hint:
         return F.broadcast(df)
     return df

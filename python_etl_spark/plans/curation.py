@@ -1428,15 +1428,11 @@ GROUP BY decile, t.total_value
 def events_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whale curve: users bucketed into value deciles, each decile's
     share of total value — the concentration report behind 'top 10%
-    of users drive X%'. Deciles come from the SCALE-SAFE global rank
-    (range partition + broadcast offsets, operators/ranking.py), not a
-    single-partition NTILE window, then NTILE's exact closed form:
-    with q = n div 10 and rem = n mod 10, ranks <= (q+1)*rem fall in
-    bucket ceil(r/(q+1)), the rest in rem + ceil((r-(q+1)*rem)/q) —
-    the first rem buckets take the extra row, exactly like NTILE, so
-    the oracle can still say NTILE. Billions of users rank in
-    parallel."""
-    from python_etl_spark.operators.ranking import global_rank
+    of users drive X%'. Deciles come from operators/ranking.with_ntile
+    (NTILE's closed form over the global rank: one window when the
+    per-user frame fits, range partitions with literal offsets when it
+    does not), so the oracle can still say NTILE."""
+    from python_etl_spark.operators.ranking import with_ntile
 
     ev = _t(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
@@ -1448,21 +1444,9 @@ def events_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value")
     )
-    ranked, n_users = global_rank(
-        per_user,
-        [F.desc("user_value"), F.asc("user_id")],
-        rank_col="__rank",
+    dec = with_ntile(
+        per_user, [F.desc("user_value"), F.asc("user_id")], 10, "decile"
     )
-    q, rem = divmod(n_users, 10)
-    r = F.col("__rank")
-    if q == 0:
-        decile = r  # fewer rows than tiles: one row per leading bucket
-    else:
-        big = (q + 1) * rem
-        decile = F.when(r <= big, F.ceil(r / (q + 1))).otherwise(
-            rem + F.ceil((r - big) / q)
-        )
-    dec = ranked.withColumn("decile", decile.cast("int"))
     return (
         dec.crossJoin(F.broadcast(tot))
         .groupBy("decile", "total_value")

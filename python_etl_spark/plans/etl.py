@@ -750,8 +750,9 @@ FROM customer
 """,
 )
 def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global NTILE without the single-partition window: range-partition
-    + per-partition row_number + broadcast offsets (operators/ranking)."""
+    """Global NTILE through operators/ranking.with_ntile: one window
+    while customer fits the broadcast threshold, range partitions with
+    literal offsets once it does not."""
     from python_etl_spark.operators.ranking import with_ntile
 
     cust = _t(spark, sf_dir, "customer")
@@ -1832,12 +1833,13 @@ def etl_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 12.5% stratified sample per order priority, deterministic
     (md5-hash order within each stratum, so every engine and every run
     picks the same rows). Scale-safe: per-stratum ranks come from ONE
-    range-partitioned global rank (operators/ranking.py — parallel
-    windows + broadcast offsets), minus each stratum's broadcast start
-    offset. No per-stratum single task, unlike a plain
+    global rank (operators/ranking.py — range partitions + literal
+    offsets past the broadcast threshold), minus each stratum's
+    broadcast start offset. No per-stratum single task, unlike a plain
     Window.partitionBy(stratum) over few huge strata."""
     import math
 
+    from python_etl_spark.frames import local_frame
     from python_etl_spark.operators.ranking import global_rank
 
     orders = _t(spark, sf_dir, "orders").select(
@@ -1846,9 +1848,7 @@ def etl_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = orders.withColumn(
         "__h", F.md5(F.col("o_orderkey").cast("string"))
     )
-    ranked, _n = global_rank(
-        df, ["o_orderpriority", "__h", "o_orderkey"], "__g"
-    )
+    ranked = global_rank(df, ["o_orderpriority", "__h", "o_orderkey"], "__g")
     # per-stratum start offsets + kept-row counts: O(#strata) rows only
     counts = {
         r["o_orderpriority"]: r["n"]
@@ -1860,8 +1860,8 @@ def etl_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     for pri in sorted(counts):
         rows.append((pri, acc, math.ceil(0.125 * counts[pri])))
         acc += counts[pri]
-    off = spark.createDataFrame(
-        rows, "o_orderpriority string, __off long, __keep long"
+    off = local_frame(
+        spark, rows, "o_orderpriority string, __off long, __keep long"
     )
     return (
         ranked.join(F.broadcast(off), "o_orderpriority")
@@ -1970,12 +1970,13 @@ def etl_surrogate_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive surrogate-key assignment over a total order — the
     dimension-load primitive (monotonically_increasing_id leaves gaps;
     warehouses want dense keys). Scale-safe global rank
-    (operators/ranking.py): range partition + parallel windows +
-    broadcast offsets, no Exchange SinglePartition."""
+    (operators/ranking.py): past the broadcast threshold, range
+    partition + parallel windows + literal offsets, no Exchange
+    SinglePartition."""
     from python_etl_spark.operators.ranking import global_rank
 
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    ranked, _ = global_rank(orders, ["o_orderdate", "o_orderkey"], "sk")
+    ranked = global_rank(orders, ["o_orderdate", "o_orderkey"], "sk")
     return ranked.select("o_orderkey", F.col("sk").cast("bigint").alias("sk"))
 
 
@@ -2001,8 +2002,9 @@ def etl_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic hash order, running token total, then bin = the
     2048-token block the doc STARTS in — contiguous ~budget-sized
     micro-batches. The running total uses the scale-safe global cumsum
-    (range partition + broadcast prefix offsets), so packing 100 TB of
-    docs never funnels through one task."""
+    (range partition + literal prefix offsets past the broadcast
+    threshold), so packing 100 TB of docs never funnels through one
+    task."""
     from python_etl_spark.operators.ranking import global_cumsum
 
     docs = _t(spark, sf_dir, "documents")

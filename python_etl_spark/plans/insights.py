@@ -67,11 +67,11 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency, and monetary value, then profile the segments — the
     classic CRM cut. The raw stream collapses to one row per user
     FIRST (one partial-agg shuffle); each quartile is then assigned by
-    operators/ranking.with_ntile (range-partition + per-partition
-    row_number + broadcast offsets), so no pass ever funnels the
-    per-user frame — |users| rows, 10^8–10^9 at 100 TB — through a
-    single-partition window. Three with_ntile passes, each fully
-    parallel. Deterministic via user_id tie-breaks."""
+    operators/ranking.with_ntile: once the per-user frame — |users|
+    rows, 10^8–10^9 at 100 TB — outgrows the broadcast threshold, each
+    pass is range-partition + per-partition row_number + literal
+    offsets, never a single-partition window. Deterministic via
+    user_id tie-breaks."""
     from python_etl_spark.operators.ranking import with_ntile
 
     ev = _t(spark, sf_dir, "events")
@@ -125,11 +125,12 @@ FROM d GROUP BY decile
 def etl_decile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile banding of order value — the distribution report every
     revenue dashboard starts with. NTILE(10) semantics via
-    operators/ranking.with_ntile: range-partition on (o_totalprice,
-    o_orderkey), per-partition row_number, broadcast offsets, decile in
-    closed form — the orders fact never funnels through one task. The
-    deterministic o_orderkey tie-break makes bucket edges
-    engine-identical to the oracle's windowed NTILE."""
+    operators/ranking.with_ntile: past the broadcast threshold,
+    range-partition on (o_totalprice, o_orderkey), per-partition
+    row_number, literal offsets, decile in closed form — the orders
+    fact never funnels through one task. The deterministic o_orderkey
+    tie-break makes bucket edges engine-identical to the oracle's
+    windowed NTILE."""
     from python_etl_spark.operators.ranking import with_ntile
 
     o = _t(spark, sf_dir, "orders")

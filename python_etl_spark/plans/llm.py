@@ -2264,10 +2264,10 @@ def etl_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc is selected when it STARTS inside the budget, so the cut is a
     deterministic prefix of the quality ordering. The running total is
     the scale-safe global cumsum (operators/ranking.global_cumsum:
-    range partition on the order key + parallel prefix sums +
-    broadcast offsets) — no single-partition window, same machinery
-    as sequence packing; at 100 TB the ordering shuffle is the only
-    corpus-wide exchange."""
+    range partition on the order key + parallel prefix sums + literal
+    offsets once the input outgrows the broadcast threshold) — same
+    machinery as sequence packing; at 100 TB the ordering shuffle is
+    the only corpus-wide exchange."""
     from python_etl_spark.operators.ranking import global_cumsum
 
     docs = _t(spark, sf_dir, "documents")

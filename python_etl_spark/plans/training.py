@@ -639,12 +639,12 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     head+middle of a crawl and drop (or re-sample) the tail.
 
     Scale posture: the tercile assignment uses
-    operators/ranking.with_ntile (range-partition + broadcast offsets)
-    — NO single-partition global window over the per-doc frame. Bucket
-    profiles report the exact decimal SUM of the (already 6-decimal)
-    scores rather than a mean: a mean's division lands on rounding
-    midpoints often enough to flip engines (same lesson as the JL
-    projection)."""
+    operators/ranking.with_ntile (one window while the per-doc frame
+    fits the broadcast threshold, range partitions + literal offsets
+    once it does not). Bucket profiles report the exact decimal SUM of
+    the (already 6-decimal) scores rather than a mean: a mean's
+    division lands on rounding midpoints often enough to flip engines
+    (same lesson as the JL projection)."""
     from python_etl_spark.operators.ranking import with_ntile
     from python_etl_spark.plans.llm import text_bigram_logprob
 
@@ -850,9 +850,10 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale posture: the global running sum uses
     operators/ranking.global_cumsum (range-partition + parallel prefix
-    sums + broadcast offsets — no single-partition window; ends sort
-    before starts at the same instant via the delta tie-break, matching
-    the oracle's ORDER BY). Span collapse is one partial-agg shuffle to
+    sums + literal offsets once the input outgrows the broadcast
+    threshold, one window below it; ends sort before starts at the
+    same instant via the delta tie-break, matching the oracle's ORDER
+    BY). Span collapse is one partial-agg shuffle to
     |users × days| rows. Integer epoch-second arithmetic throughout."""
     from python_etl_spark.operators.ranking import global_cumsum
 
@@ -3711,7 +3712,7 @@ def etl_identity_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-water drift breaks it.
 
     Scale posture: assignment is one O(#partitions) count agg + a
-    broadcast offsets join over a checkpointed frame — zero row
+    literal offsets lookup over a checkpointed frame — zero row
     shuffles, zero Python; the high-water walk is metadata-only."""
     import os
     import tempfile

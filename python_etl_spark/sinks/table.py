@@ -133,6 +133,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+from python_etl_spark.frames import local_frame
+from python_etl_spark.operators.ranking import partition_offsets
 
 
 def _active_spark() -> SparkSession:
@@ -700,48 +704,35 @@ class VersionedTable:
         0-based record number in the low 33) over a CHECKPOINTED frame
         (materialized once, so the recorded high-water can never
         disagree with the written bytes), plus per-partition offsets:
-        one O(#partitions)-row count agg broadcast-joined back. Zero
-        row shuffles, zero Python, contiguous per commit (gaps only
+        one O(#partitions)-row count collect, read back as a literal
+        array indexed by the partition id. Zero row shuffles, zero
+        Python, contiguous per commit (gaps only
         appear when a conflict retry orphans an attempt — Delta's
         documented identity behavior)."""
         mono = "__ident_mono"
         df = df.withColumn(mono, F.monotonically_increasing_id())
         df = df.localCheckpoint(eager=True)
-        spark = df.sparkSession
         # Integer bit arithmetic, not floating division: a double is
         # exact only below 2^53, so `mono / 2^33` misrounds the pid
         # once partition ids pass ~2^20 — plausible on a wide cluster.
         pid = F.shiftright(F.col(mono), 33)
         loc = F.col(mono).bitwiseAND(F.lit((1 << 33) - 1))
-        counts = sorted(
-            (r["__pid"], r["n"])
+        counts = {
+            int(r["__pid"]): int(r["n"])
             for r in df.groupBy(pid.alias("__pid"))
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
-        )
-        offsets, acc = [], 0
-        for p, n in counts:
-            offsets.append((int(p), acc))
-            acc += int(n)
-        off_df = spark.createDataFrame(
-            offsets or [(0, 0)], "__pid long, __off long"
-        )
-        out = df.withColumn("__pid", pid).join(
-            F.broadcast(off_df), "__pid", "left"
-        )
-        new_hw = dict(hw)
+        }
+        off, total = partition_offsets(counts, pid, LongType())
+        pos = F.coalesce(off, F.lit(0)) + loc + 1
+        out, new_hw = df, dict(hw)
         for c, s in spec.items():
             step = int(s["step"])
             out = out.withColumn(
-                c,
-                (
-                    F.lit(int(hw[c]))
-                    + F.lit(step)
-                    * (F.col("__off") + loc + 1)
-                ).cast("long"),
+                c, (F.lit(int(hw[c])) + F.lit(step) * pos).cast("long")
             )
-            new_hw[c] = int(hw[c]) + step * acc
-        return out.drop(mono, "__pid", "__off"), new_hw
+            new_hw[c] = int(hw[c]) + step * (total or 0)
+        return out.drop(mono), new_hw
 
     def _accept_explicit_identity(
         self,
@@ -2992,9 +2983,7 @@ class VersionedTable:
                 )
                 for f in pre_pattern
             ]
-            return spark.createDataFrame(
-                rows or [("", "")], "file string, action string"
-            ).where(F.col("file") != "")
+            return local_frame(spark, rows, "file string, action string")
         if not new_files:
             return {
                 "version": None,
@@ -3125,7 +3114,8 @@ class VersionedTable:
                     "rewrite" if pr else "carry",
                 )
             )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted(out),
             "dir string, rows long, stats_admitted boolean, "
             "bloom_admitted boolean, files_total int, "
@@ -3170,7 +3160,8 @@ class VersionedTable:
             )
             for d in dirs
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted(out),
             "dir string, rows long, matched_rows long, action string",
         )
@@ -3481,7 +3472,7 @@ class VersionedTable:
                     ]
                 )
             else:
-                base = spark.createDataFrame([], target)
+                base = local_frame(spark, [], target)
             # ONE pass: the merge and its change feed come out of the
             # same key window (upsert) or key join (clauses), tagged
             # 'data' or a change type, and ONE write lands both
@@ -3962,11 +3953,10 @@ class VersionedTable:
                         ]
                     )
                     try:
-                        frame = spark.createDataFrame(
-                            [tuple(t) for t in combos], probe_schema
-                        )
+                        frame = local_frame(spark, combos, probe_schema)
                     except (TypeError, ValueError):
-                        frame = spark.createDataFrame(
+                        frame = local_frame(
+                            spark,
                             [
                                 tuple(
                                     None if v is None else str(v)
@@ -3994,7 +3984,7 @@ class VersionedTable:
         if not dirs:
             # only the empty result needs the full snapshot's schema
             schema = self.read(spark, m["version"]).schema
-            return spark.createDataFrame([], schema).where(cond)
+            return local_frame(spark, [], schema).where(cond)
         return self._read_snapshot_subset(
             spark, m, dirs, file_subsets=subsets
         ).where(cond)
@@ -5216,9 +5206,7 @@ class VersionedTable:
             )
         cur = self._read_manifest(upto)
         if since_version == upto:
-            return spark.createDataFrame(
-                [], self.read(spark, upto).schema
-            )
+            return local_frame(spark, [], self.read(spark, upto).schema)
         # range guard: ops for (since, upto] — manifests first, the
         # newest checkpoint's commit summaries as the fallback when
         # clean_metadata dropped a tail manifest
@@ -5245,9 +5233,7 @@ class VersionedTable:
         base_dirs = set(self._read_manifest(since_version)["data_dirs"])
         new_dirs = [d for d in cur["data_dirs"] if d not in base_dirs]
         if not new_dirs:
-            return spark.createDataFrame(
-                [], self.read(spark, upto).schema
-            )
+            return local_frame(spark, [], self.read(spark, upto).schema)
         evolved = self._schema_evolved(upto)
         schemas = self._dir_schemas(cur)
         if len(new_dirs) == 1 or not self.partition_columns():
@@ -5323,7 +5309,7 @@ class VersionedTable:
             schema = schema.add(
                 StructField("_commit_version", LongType())
             )
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
 
         if since_version == upto:
             return _empty()

@@ -160,6 +160,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from python_etl_spark.frames import local_frame
+
 _VT = r"vt\s*'([^']+)'"
 _TRAVEL = (
     rf"{_VT}(?:\s+version\s+as\s+of\s+(\d+)"
@@ -508,7 +510,8 @@ def _receipt(spark: SparkSession, **kv) -> DataFrame:
     import json as _json
 
     cols = ", ".join(f"{k} string" for k in kv)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(_json.dumps(v) if not isinstance(v, str) else v
                for v in kv.values())],
         cols,
@@ -1038,7 +1041,7 @@ def _create_schema(spark: SparkSession, m: re.Match) -> DataFrame:
     if path is None:
         path = _named_destination(name)
     v = _table(path).create(
-        spark.createDataFrame([], schema),
+        local_frame(spark, [], schema),
         partition_by=pby,
         constraints=constraints or None,
         generated=generated or None,
@@ -1519,25 +1522,18 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
 
             for d in t._read_manifest()["data_dirs"]:
                 _walk(d, 0, ())
-            rows = sorted(seen) or None
             schema = ", ".join(f"{c} string" for c in pcols)
-            if rows is None:
-                return spark.createDataFrame([], schema)
-            return spark.createDataFrame(rows, schema)
+            return local_frame(spark, sorted(seen), schema)
         if re.match(r"show\s+views$", stmt, re.IGNORECASE):
             vs = sorted(_catalog().views().items())
-            return spark.createDataFrame(
-                vs or [(None, None)], "name string, text string"
-            ).where("name IS NOT NULL")
+            return local_frame(spark, vs, "name string, text string")
         if not re.match(r"show\s+tables$", stmt, re.IGNORECASE):
             raise ValueError(
                 "SHOW grammar: SHOW TABLES | SHOW VIEWS | SHOW "
                 "PARTITIONS vt'<path>'|<name>"
             )
         names = sorted(_catalog().names().items())
-        return spark.createDataFrame(
-            names or [(None, None)], "name string, location string"
-        ).where("name IS NOT NULL")
+        return local_frame(spark, names, "name string, location string")
     if verb == "DESCRIBE":
         dm = re.match(
             rf"describe\s+(?:table\s+)?{_VT}$", stmt, re.IGNORECASE
@@ -1577,8 +1573,8 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 (f"constraint:{n}", "check", e)
                 for n, e in sorted(cons.items())
             ]
-            return spark.createDataFrame(
-                rows, "col_name string, data_type string, comment string"
+            return local_frame(
+                spark, rows, "col_name string, data_type string, comment string"
             )
         m = re.match(
             rf"describe\s+(history|detail)\s+{_VT}$", stmt, re.IGNORECASE
@@ -1600,7 +1596,8 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 )
                 for h in t.history()
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "version long, op string, committed_at double, "
                 "num_rows long, n_dirs long",
@@ -1608,7 +1605,8 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
         d = t.detail()
         import json as _json
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(k, _json.dumps(v, default=str)) for k, v in sorted(d.items())],
             "property string, value string",
         )
@@ -1630,7 +1628,8 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
         acts = _table(m.group(1)).optimize(spark, cluster_by=cluster)
         import json as _json
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (a["action"], a.get("version"), _json.dumps(a, default=str))
                 for a in acts
@@ -1691,13 +1690,11 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
             removed = t.vacuum(
                 grace_seconds=float(m.group(3)) * 3600.0
             )
-            return spark.createDataFrame(
-                [(d,) for d in removed] or [(None,)], "removed string"
-            ).where("removed IS NOT NULL")
+            return local_frame(spark, [(d,) for d in removed], "removed string")
         would = t.vacuum(dry_run=True)
-        return spark.createDataFrame(
-            [(d,) for d in would] or [(None,)], "would_remove string"
-        ).where("would_remove IS NOT NULL")
+        return local_frame(
+            spark, [(d,) for d in would], "would_remove string"
+        )
     raise ValueError(
         f"unsupported statement head {verb!r} — the router speaks "
         f"SELECT/WITH (with vt'...'/named-table time travel and "

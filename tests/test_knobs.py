@@ -71,3 +71,26 @@ def test_get_spark_reads_shuffle_knob_through_env_int(monkeypatch):
     assert conf["spark.sql.shuffle.partitions"] == "32"
     monkeypatch.setenv("SPARK_SQL_SHUFFLE_PARTITIONS", "-3")
     assert session.get_spark()["spark.sql.shuffle.partitions"] == "1"
+
+
+def test_spread_target_follows_size_estimate(spark, sf_dir, monkeypatch):
+    """_spread sizes the sketch stages from Catalyst's estimate:
+    ceil(estimate / SPARK_GRAFT_SPREAD_TASK_BYTES) tasks, capped at the
+    session parallelism, and no repartition when the source already
+    has that many partitions."""
+    from python_etl_spark.frames import estimated_bytes
+    from python_etl_spark.operators.dedup import _spread
+    from python_etl_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").coalesce(1)
+    est = estimated_bytes(docs)
+    assert est and est > 2
+    cap = spark.sparkContext.defaultParallelism
+    assert cap >= 2
+    for task_bytes, want in ((est, None), (-(-est // 2), 2), (1, cap)):
+        monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", str(task_bytes))
+        out = _spread(docs)
+        if want is None:
+            assert out is docs, task_bytes
+        else:
+            assert out.rdd.getNumPartitions() == want, task_bytes

@@ -4,6 +4,8 @@ joins broadcast instead of shuffling."""
 
 from __future__ import annotations
 
+import contextlib
+
 from python_etl_spark.plans import QUERIES
 
 
@@ -14,6 +16,19 @@ def _plan(spark, sf_dir, name: str) -> str:
         .executedPlan()
         .toString()
     )
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    """Plan under autoBroadcastJoinThreshold=``value``; ``1b`` makes
+    every input "large", as it is at 100 TB."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -48,11 +63,31 @@ def test_q01_whole_stage_codegen(spark, sf_dir):
 def test_global_rank_no_single_partition_window(spark, sf_dir):
     """win_ntile / win_percent_rank / etl_stratified_sample must not
     funnel all rows through a single-partition global-order window (the
-    100 TB scale-killer)."""
-    for name in ["win_ntile", "win_percent_rank", "etl_stratified_sample",
-                 "etl_surrogate_key", "etl_sequence_pack"]:
-        plan = _plan(spark, sf_dir, name)
-        assert "Exchange SinglePartition" not in plan, (name, plan)
+    100 TB scale-killer) once the input no longer fits the broadcast
+    threshold."""
+    with _broadcast_threshold(spark, "1b"):
+        for name in ["win_ntile", "win_percent_rank", "etl_stratified_sample",
+                     "etl_surrogate_key", "etl_sequence_pack"]:
+            plan = _plan(spark, sf_dir, name)
+            assert "Exchange SinglePartition" not in plan, (name, plan)
+
+
+def test_win_ntile_constructs_without_jobs(spark, sf_dir):
+    """An input under the broadcast threshold ranks in one window:
+    building win_ntile runs no Spark job (the range path ran 5), and
+    its plan has no range exchange."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construct-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        df = QUERIES["win_ntile"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan, plan
 
 
 def test_broadcast_stat_joins(spark, sf_dir):
@@ -183,6 +218,8 @@ def test_dim_broadcast_policy_size_gated(spark, sf_dir):
     saved = spark.conf.get(thr_key)
     try:
         # small SF: estimate fits the default threshold -> hint fires
+        hinted = bc_dim(cust)
+        assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
         assert "BroadcastHashJoin" in joined_plan()
         # simulate 100 TB: customer no longer fits -> no hint. (AQE may
         # still broadcast at runtime; assert on the HINT, not the join.)
@@ -191,6 +228,9 @@ def test_dim_broadcast_policy_size_gated(spark, sf_dir):
         assert "ResolvedHint" not in hinted._jdf.queryExecution().analyzed().toString()
     finally:
         spark.conf.set(thr_key, saved)
+    # back under the default threshold the hint is there again
+    hinted = bc_dim(cust)
+    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
     # q25 (the VERDICT's representative) still broadcasts its dims at
     # the test SF under the gated policy
     assert "BroadcastHashJoin" in _plan(spark, sf_dir, "q25_nation_trade_balance")
@@ -199,11 +239,13 @@ def test_dim_broadcast_policy_size_gated(spark, sf_dir):
 def test_decile_and_rfm_no_single_partition_window(spark, sf_dir):
     """etl_decile_report (NTILE over the orders fact) and
     events_rfm_segments (three NTILEs over the per-user frame) ride
-    operators/ranking.with_ntile — range-partition + broadcast offsets.
-    Neither plan may funnel a fact/user-sized frame through one task."""
-    for name in ["etl_decile_report", "events_rfm_segments"]:
-        plan = _plan(spark, sf_dir, name)
-        assert "Exchange SinglePartition" not in plan, (name, plan)
+    operators/ranking.with_ntile. Once the input no longer fits the
+    broadcast threshold, neither plan may funnel a fact/user-sized
+    frame through one task."""
+    with _broadcast_threshold(spark, "1b"):
+        for name in ["etl_decile_report", "events_rfm_segments"]:
+            plan = _plan(spark, sf_dir, name)
+            assert "Exchange SinglePartition" not in plan, (name, plan)
 
 
 def test_streak_and_cohort_partitioned_windows(spark, sf_dir):
@@ -279,9 +321,11 @@ def test_analyze_table_scans_prune_to_one_column(spark, sf_dir):
 
 
 def test_peak_concurrency_no_single_partition(spark, sf_dir):
-    """The sweep-line running sum must ride global_cumsum's
-    range-partition machinery — no Exchange SinglePartition anywhere."""
-    plan = _plan(spark, sf_dir, "events_peak_concurrency")
+    """Once its input no longer fits the broadcast threshold, the
+    sweep-line running sum must ride global_cumsum's range-partition
+    machinery — no Exchange SinglePartition anywhere."""
+    with _broadcast_threshold(spark, "1b"):
+        plan = _plan(spark, sf_dir, "events_peak_concurrency")
     assert "Exchange SinglePartition" not in plan
 
 

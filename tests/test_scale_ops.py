@@ -40,8 +40,9 @@ def test_salted_join_left_keeps_unmatched(spark):
 
 
 def test_global_rank_matches_window(spark, sf_dir):
-    """Scale-safe global rank == row_number over the same total order,
-    for several partition counts (offsets must compose correctly)."""
+    """Global rank == row_number over the same total order: on the
+    one-window path (no ``num_partitions``, the input fits) and on the
+    range path for several partition counts (offsets must compose)."""
     from pyspark.sql import Window
 
     from python_etl_spark.operators.ranking import global_rank, with_ntile
@@ -54,19 +55,55 @@ def test_global_rank_matches_window(spark, sf_dir):
             "c_custkey", F.row_number().over(w).alias("rn")
         ).collect()
     }
-    for n_parts in (1, 7, 32):
-        ranked, n = global_rank(
+    for n_parts in (None, 1, 7, 32):
+        ranked = global_rank(
             cust, ["c_acctbal", "c_custkey"], "r", num_partitions=n_parts
         )
+        assert dict(ranked.dtypes)["r"] == "bigint"
         got = {r.c_custkey: r.r for r in ranked.select("c_custkey", "r").collect()}
-        assert n == len(want)
+        assert ranked.count() == len(want)
         assert got == want, n_parts
-    # ntile edge: more buckets than rows -> tile == rank
+    # ntile edge: more buckets than rows -> tile == rank, on both paths
     tiny = cust.limit(3)
-    tiles = sorted(
-        r.t for r in with_ntile(tiny, ["c_custkey"], 10, out_col="t").collect()
-    )
-    assert tiles == [1, 2, 3]
+    for n_parts in (None, 2):
+        tiles = sorted(
+            r.t
+            for r in with_ntile(
+                tiny, ["c_custkey"], 10, out_col="t", num_partitions=n_parts
+            ).collect()
+        )
+        assert tiles == [1, 2, 3], n_parts
+
+
+def test_ntile_and_percent_rank_match_sql_on_both_paths(spark):
+    """NTILE / percent_rank / cume_dist closed forms == Spark's own
+    window functions, on the one-window path and the range path."""
+    from pyspark.sql import Window
+
+    from python_etl_spark.operators.ranking import with_ntile, with_percent_rank
+
+    for n in (1, 23):
+        df = spark.range(n).selectExpr("id", "(id * 7919) % 101 AS k")
+        w = Window.orderBy("k", "id")
+        want = {
+            r.id: (r.t, r.pr, r.cd)
+            for r in df.select(
+                "id",
+                F.ntile(10).over(w).alias("t"),
+                F.percent_rank().over(w).alias("pr"),
+                F.cume_dist().over(w).alias("cd"),
+            ).collect()
+        }
+        for n_parts in (None, 3):
+            got = {
+                r.id: (r.t, r.pr, r.cd)
+                for r in with_percent_rank(
+                    with_ntile(df, ["k", "id"], 10, "t", num_partitions=n_parts),
+                    ["k", "id"],
+                    num_partitions=n_parts,
+                ).collect()
+            }
+            assert got == want, (n, n_parts)
 
 
 def test_salted_join_rejects_replicated_outer(spark):
@@ -255,7 +292,7 @@ def test_global_cumsum_matches_window(spark, sf_dir):
             "c_custkey", F.sum("v").over(w).alias("cs")
         ).collect()
     }
-    for n_parts in (1, 7, 32):
+    for n_parts in (None, 1, 7, 32):
         got = {
             r.c_custkey: r.cum
             for r in global_cumsum(
@@ -263,6 +300,36 @@ def test_global_cumsum_matches_window(spark, sf_dir):
             ).collect()
         }
         assert got == want, n_parts
+    # a partition whose own prefix is all NULL still carries the sum of
+    # the partitions before it (SQL: NULL only until the first value)
+    nulls = spark.range(12).selectExpr(
+        "id AS k", "CASE WHEN id BETWEEN 4 AND 7 THEN NULL ELSE id END AS v"
+    )
+    w = Window.orderBy("k").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    want = {r.k: r.cs for r in nulls.select("k", F.sum("v").over(w).alias("cs")).collect()}
+    assert want[4] == 6 and want[0] == 0
+    for n_parts in (None, 1, 3, 6):
+        got = {
+            r.k: r.cum
+            for r in global_cumsum(
+                nulls, ["k"], "v", "cum", num_partitions=n_parts
+            ).collect()
+        }
+        assert got == want, n_parts
+    # all-NULL prefix: NULL until the first value, on both paths
+    lead = spark.range(6).selectExpr(
+        "id AS k", "CASE WHEN id < 3 THEN NULL ELSE id END AS v"
+    )
+    for n_parts in (None, 3):
+        got = sorted(
+            (r.k, r.cum)
+            for r in global_cumsum(
+                lead, ["k"], "v", "cum", num_partitions=n_parts
+            ).collect()
+        )
+        assert got == [(0, None), (1, None), (2, None), (3, 3), (4, 7), (5, 12)]
 
 
 def test_approx_quantiles_rank_error_bound(spark, sf_dir):
