@@ -13,10 +13,10 @@ All of these avoid the O(n^2) all-pairs comparison:
 
 Shuffle-side work is JVM Catalyst expressions throughout. The two
 per-row sketch computations (MinHash signatures, SimHash fingerprints)
-default to vectorized Arrow/numpy map kernels that replicate the
-Catalyst xxhash64 arithmetic BIT-EXACTLY (pinned in tests) — narrow
-map stages, nothing Python ever crosses an exchange; pass
-``engine='jvm'`` for the pure-Catalyst twins.
+run as vectorized Arrow/numpy map kernels that replicate the Catalyst
+xxhash64 arithmetic BIT-EXACTLY (pinned in tests/test_dedup.py against
+pure-Catalyst reference expressions) — narrow map stages, nothing
+Python ever crosses an exchange.
 """
 
 from __future__ import annotations
@@ -36,17 +36,11 @@ from pyspark.sql import functions as F
 # The target count is derived from Catalyst's plan-stats size estimate
 # (guide §2: scale-adaptive, derived from input size, never a
 # core-count constant) and capped at the session parallelism.
-# Parameterised for cluster tuning; the default keeps the driver bench
-# comparable across rounds (an unparsable value falls back to it, and
-# the knob is clamped to >= 1).
-def _spread_task_bytes() -> int:
-    from python_etl_spark.session import env_int
-
-    return env_int("SPARK_GRAFT_SPREAD_TASK_BYTES", 96 * 1024)
+_SPREAD_TASK_BYTES = 96 * 1024
 
 
-# (applicationId, analyzed-plan semanticHash, source fingerprint, task
-# bytes) -> target partition count (0 = leave the source partitioning alone).
+# (applicationId, analyzed-plan semanticHash, source fingerprint) ->
+# target partition count (0 = leave the source partitioning alone).
 # docs.rdd.getNumPartitions() forces a full physical planning pass and
 # .stats() an optimize pass (~35+80 ms py4j+Catalyst) on EVERY query
 # construction; the answer is a pure function of (plan, backing files)
@@ -60,7 +54,7 @@ def _spread(docs: DataFrame) -> DataFrame:
     """Repartition a too-narrow source scan for the sketch stages
     (document tables often arrive as a single file/partition, leaving
     explode+hash single-threaded). The target partition count derives
-    from the input size estimate — ceil(size / _spread_task_bytes()),
+    from the input size estimate — ceil(size / _SPREAD_TASK_BYTES),
     capped at the session's parallelism — so tiny corpora get a few
     fat tasks instead of a per-core fan-out, and the count grows with
     the data until the cap."""
@@ -68,13 +62,11 @@ def _spread(docs: DataFrame) -> DataFrame:
     from python_etl_spark.sources.tables import source_fingerprint
 
     sc = docs.sparkSession.sparkContext
-    task_bytes = _spread_task_bytes()
     try:
         key = (
             sc.applicationId,
             docs._jdf.queryExecution().analyzed().semanticHash(),
             source_fingerprint(docs),
-            task_bytes,
         )
         target = _NPART_MEMO.get(key)
     except Exception:  # pragma: no cover - py4j surface drift
@@ -85,7 +77,9 @@ def _spread(docs: DataFrame) -> DataFrame:
         want = (
             sc.defaultParallelism  # no stats: fall back to the core count
             if est is None
-            else min(sc.defaultParallelism, max(1, -(-est // task_bytes)))
+            else min(
+                sc.defaultParallelism, max(1, -(-est // _SPREAD_TASK_BYTES))
+            )
         )
         target = 0 if n_src >= want else want
         if key is not None:
@@ -93,37 +87,6 @@ def _spread(docs: DataFrame) -> DataFrame:
                 _NPART_MEMO.clear()
             _NPART_MEMO[key] = target
     return docs.repartition(target) if target else docs
-
-
-def _arrow_engine_available() -> bool:
-    """The ``engine='arrow'`` kernels need numpy+pyarrow on the Python
-    workers. A driver-side import is the cheap proxy (local mode shares
-    the env; on a cluster with mismatched executor images the task
-    raises the normal worker ImportError — the JVM twins stay available
-    as ``engine='jvm'``). Checked where the DEFAULT is applied so a
-    numpy-less deployment degrades to pure Catalyst instead of failing
-    at runtime (ADVICE r14)."""
-    try:
-        import numpy  # noqa: F401
-        import pyarrow  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def _resolve_engine(engine: str | None) -> str:
-    """The sketch engine to run. ``None`` (the default) picks the Arrow
-    kernel when numpy+pyarrow import and the JVM twin otherwise; an
-    EXPLICIT choice is honored, so ``engine='arrow'`` without them
-    raises instead of silently running the slower Catalyst path."""
-    if engine is None:
-        return "arrow" if _arrow_engine_available() else "jvm"
-    if engine == "arrow" and not _arrow_engine_available():
-        raise ImportError(
-            "engine='arrow' needs numpy and pyarrow; install them or "
-            "pass engine='jvm' (or leave engine unset to fall back)"
-        )
-    return engine
 
 
 # ------------------------------- shingling --------------------------------
@@ -544,6 +507,18 @@ def _minhash_sig_kernel(num_hashes: int):
     return fn
 
 
+def _gram_hashes(text_col: str, k: int) -> F.Column:
+    """array<bigint>: xxhash64 of each word k-gram of ``text_col``
+    (the whole text as one gram when it has fewer than k tokens) —
+    the per-row input of the MinHash kernel."""
+    toks = F.split(F.col(text_col), " ", -1)
+    n_sh = F.size(toks) - F.lit(k - 1)
+    return F.when(
+        n_sh >= 1,
+        F.transform(_word_grams(toks, k), lambda g: F.xxhash64(g)),
+    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", toks))))
+
+
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -551,7 +526,6 @@ def minhash_signatures(
     num_hashes: int = 64,
     k: int = 3,
     max_doc_freq: int | None = None,
-    engine: str | None = None,
 ) -> DataFrame:
     """(id, sig array<long>) — num_hashes independent min-hashes.
 
@@ -562,18 +536,15 @@ def minhash_signatures(
     sf0.1). Each hash function is a cheap long-input remix of the
     single string hash (hashing the string once, not 64 times).
 
-    ``engine='arrow'`` (the default when numpy+pyarrow import; an
-    explicit ``'arrow'`` without them raises) evaluates the 64
-    min-remixes in ONE vectorized numpy kernel over Arrow batches
-    (guide: do the heavy lifting in native code inside the map
+    The 64 min-remixes run in ONE vectorized numpy kernel over Arrow
+    batches (guide: do the heavy lifting in native code inside the map
     stage). The kernel is a bit-exact replication of Spark's
-    two-argument ``xxhash64(int, bigint)`` — verified value-for-value
-    against the JVM in tests — so signatures, bands and downstream
-    pair sets are IDENTICAL to ``engine='jvm'``, which keeps the
-    pure-Catalyst expression (interpreted higher-order functions, ~4x
-    slower at sf0.1). String->shingle hashing stays JVM-side either way; only
-    the (grams x seeds) remix+min crosses Arrow, and only the two
-    columns it needs are shipped.
+    two-argument ``xxhash64(int, bigint)`` — pinned value-for-value
+    against the pure-Catalyst ``array_min(transform(grams, g ->
+    xxhash64(seed, g)))`` in tests/test_dedup.py, which is ~4x slower
+    at sf0.1. String->shingle hashing stays JVM-side
+    (``_gram_hashes``); only the (grams x seeds) remix+min crosses
+    Arrow, and only the two columns it needs are shipped.
 
     With ``max_doc_freq`` the signature must see only shingles that
     survive the GLOBAL document-frequency cap, which inherently needs
@@ -596,37 +567,17 @@ def minhash_signatures(
             ).alias("sig"),
         )
     docs = _spread(docs)
-    toks = F.split(F.col(text_col), " ", -1)
-    n_sh = F.size(toks) - F.lit(k - 1)
-    grams = F.when(
-        n_sh >= 1,
-        F.transform(_word_grams(toks, k), lambda g: F.xxhash64(g)),
-    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", toks))))
-    docs_g = docs.select(F.col(id_col).alias("id"), grams.alias("grams"))
-    if _resolve_engine(engine) == "arrow":
-        # the kernel passes ids through untouched — declare their
-        # NATIVE type (string doc ids are the common corpus key; a
-        # hard-coded bigint would silently null them)
-        id_type = docs_g.schema["id"].dataType.simpleString()
-        return docs_g.mapInArrow(
-            _minhash_sig_kernel(num_hashes),
-            f"id {id_type}, sig array<bigint>",
-        )
-    # JVM reference path: one SQL parse instead of num_hashes
-    # Python-built transform trees (the py4j round trips to assemble 64
-    # lambda expressions dominated the whole query's wall time, ~1.5 s
-    # per construction at the bench; the parsed tree — literal int
-    # seeds, transform, array_min — is IDENTICAL, verified
-    # value-for-value).
-    sig = F.expr(
-        "array("
-        + ",".join(
-            f"array_min(transform(grams, g -> xxhash64({i}, g)))"
-            for i in range(num_hashes)
-        )
-        + ")"
+    docs_g = docs.select(
+        F.col(id_col).alias("id"), _gram_hashes(text_col, k).alias("grams")
     )
-    return docs_g.select("id", sig.alias("sig"))
+    # the kernel passes ids through untouched — declare their NATIVE
+    # type (string doc ids are the common corpus key; a hard-coded
+    # bigint would silently null them)
+    id_type = docs_g.schema["id"].dataType.simpleString()
+    return docs_g.mapInArrow(
+        _minhash_sig_kernel(num_hashes),
+        f"id {id_type}, sig array<bigint>",
+    )
 
 
 def band_buckets(
@@ -766,7 +717,6 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str | None = None,
 ) -> DataFrame:
     """(id, simhash long) — 64-bit SimHash over distinct tokens.
 
@@ -774,56 +724,23 @@ def simhash(
     bit is 1 when the vote sum is positive. Bits are OR-folded into one
     long (no additive overflow under ANSI mode).
 
-    ``engine='arrow'`` (default, r14, when numpy+pyarrow import; an
-    explicit ``'arrow'`` without them raises) computes the votes from
-    the IN-ROW distinct token-hash array in one vectorized numpy map
-    stage — a narrow map with ZERO exchanges, vs the explode + 64-sum
-    groupBy aggregation the JVM path keeps (one exchange plus the
-    exploded materialization). Token hashing stays JVM-side
-    (xxhash64 over strings); value-identity is pinned in
-    tests/test_dedup.py. Docs with NULL text are dropped by both
-    paths (explode of null vs an explicit filter)."""
+    The votes come from the IN-ROW distinct token-hash array in one
+    vectorized numpy map stage — a narrow map with ZERO exchanges, vs
+    the explode + 64-sum groupBy aggregation of the pure-Catalyst
+    formulation (one exchange plus the exploded materialization),
+    which tests/test_dedup.py keeps as the bit-exact reference. Token
+    hashing stays JVM-side (xxhash64 over strings). Docs with NULL
+    text are dropped."""
     docs = _spread(docs)
-    if _resolve_engine(engine) == "arrow":
-        hs = F.transform(
-            F.array_distinct(F.split(F.col(text_col), " ", -1)),
-            lambda t: F.xxhash64(t),
-        )
-        dg = docs.select(F.col(id_col).alias("id"), hs.alias("hs")).where(
-            F.col("hs").isNotNull()
-        )
-        id_type = dg.schema["id"].dataType.simpleString()
-        return dg.mapInArrow(
-            _simhash_kernel(), f"id {id_type}, simhash bigint"
-        )
-    toks = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(F.split(F.col(text_col), " ", -1))).alias(
-                "tok"
-            ),
-        )
-        .withColumn("h", F.xxhash64("tok"))
+    hs = F.transform(
+        F.array_distinct(F.split(F.col(text_col), " ", -1)),
+        lambda t: F.xxhash64(t),
     )
-    # single-parse SQL strings (identical expression trees; the 128
-    # Python-built when/shift columns dominated construction time)
-    votes = toks.groupBy("id").agg(
-        *[
-            F.expr(
-                f"sum(CASE WHEN (shiftrightunsigned(h, {i}) & 1) = 1 "
-                "THEN 1 ELSE -1 END)"
-            ).alias(f"v{i}")
-            for i in range(64)
-        ]
+    dg = docs.select(F.col(id_col).alias("id"), hs.alias("hs")).where(
+        F.col("hs").isNotNull()
     )
-    packed = F.expr(
-        " | ".join(
-            f"(CASE WHEN v{i} > 0 THEN shiftleft(CAST(1 AS BIGINT), {i}) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-            for i in range(64)
-        )
-    )
-    return votes.select("id", packed.alias("simhash"))
+    id_type = dg.schema["id"].dataType.simpleString()
+    return dg.mapInArrow(_simhash_kernel(), f"id {id_type}, simhash bigint")
 
 
 def simhash_pairs(

@@ -12,4 +12,5 @@ from python_etl_spark.plans import checked  # noqa: F401,E402
 from python_etl_spark.plans import curation  # noqa: F401,E402
 from python_etl_spark.plans import insights  # noqa: F401,E402
 from python_etl_spark.plans import training  # noqa: F401,E402
+from python_etl_spark.plans import lakehouse  # noqa: F401,E402
 from python_etl_spark.plans import web  # noqa: F401,E402

@@ -57,6 +57,48 @@ def stable_digest(s: str, n: int = 8) -> str:
     return hashlib.md5(s.encode("utf-8")).hexdigest()[:n]
 
 
+def fixture_root(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """The directory a query keeps its on-disk fixture in:
+    ``<tempdir>/spark_graft_<tag>_<applicationId>_<digest of sf_dir>``.
+    A pure function of its arguments, so every call in one session
+    finds the same directory and a new session starts from a fresh
+    one."""
+    import os
+    import tempfile
+
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"spark_graft_{tag}_{spark.sparkContext.applicationId}_"
+        f"{stable_digest(os.path.abspath(sf_dir))}",
+    )
+
+
+def fixture_table(spark: SparkSession, sf_dir: str, tag: str,
+                  *steps: Callable, name: str = "t"):
+    """The VersionedTable at ``<fixture_root>/<name>``, brought to
+    version ``len(steps) - 1``: ``steps[0](t)`` creates it and
+    ``steps[v](t)`` must commit exactly version ``v``. Only missing
+    versions run, so a second call in the session commits nothing and
+    a call after a failed step resumes at the first missing version.
+    A step that leaves any other latest version raises instead of
+    shifting the ladder (the check lists the manifest dir; no Spark
+    job)."""
+    import os
+
+    from python_etl_spark.sinks.table import VersionedTable
+
+    t = VersionedTable(os.path.join(fixture_root(spark, sf_dir, tag), name))
+    have = t.latest_version()
+    for v in range(0 if have is None else have + 1, len(steps)):
+        steps[v](t)
+        got = t.latest_version()
+        if got != v:
+            raise RuntimeError(
+                f"fixture {tag}/{name}: step {v} left version {got}"
+            )
+    return t
+
+
 # ----------------------- broadcast-hint policy ----------------------------
 #
 # Two classes of "dimension" frame, two rules:

@@ -24,8 +24,8 @@ from python_etl_spark.operators.html import html_extract_col, html_links_col
 from python_etl_spark.plans.common import (
     dmean,
     dmean_sql,
+    fixture_root,
     register,
-    stable_digest,
 )
 from python_etl_spark.sources.tables import load_table
 
@@ -741,27 +741,21 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replay the page-construction arithmetic straight from `documents`,
 # so a hash match proves the WARC round-trip changed NOTHING.
 
-_WARC_CACHE: dict = {}
+_WARC_CACHE: set[str] = set()  # roots whose write finished
 
 
 def _warc_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Session-scoped WARC materialization of the synthetic crawl
-    (same memo posture as the shared shingle cache: keyed on
-    applicationId + source dir, built once, reused by every WARC
-    query in the session)."""
+    """Session-scoped WARC materialization of the synthetic crawl,
+    under ``fixture_root``: built once, reused by every WARC query in
+    the session. ``_WARC_CACHE`` records that the write finished, so a
+    half-written directory is rebuilt."""
     import os
-    import tempfile
 
     from python_etl_spark.sources.warc import write_warc
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _WARC_CACHE.get(key)
-    if hit and os.path.isdir(hit):
-        return hit
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_warc_{key[0]}_{stable_digest(key[1])}",
-    )
+    out = fixture_root(spark, sf_dir, "warc")
+    if out in _WARC_CACHE and os.path.isdir(out):
+        return out
     pages = _html_docs(spark, sf_dir).select(
         F.concat(
             F.lit("https://warc.example.com/doc/"),
@@ -772,7 +766,7 @@ def _warc_dir(spark: SparkSession, sf_dir: str) -> str:
     # 8 containers: enough files that read_warc's one-task-per-file
     # parallelism is actually exercised at test scale
     write_warc(pages.repartition(8), out)
-    _WARC_CACHE[key] = out
+    _WARC_CACHE.add(out)
     return out
 
 

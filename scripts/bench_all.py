@@ -39,7 +39,7 @@ def main() -> None:
     }
 
     # Fixture-backed queries (VersionedTable demos cached per session
-    # via _INCR_STORE_CACHE) report build_s/query_s SPLIT (r12
+    # under plans.common.fixture_root) report build_s/query_s SPLIT (r12
     # bookkeeping #2): the first call pays the one-time fixture
     # construction, the second call measures the steady-state query —
     # the number a cross-round regression reader should compare.

@@ -32,7 +32,7 @@ sys.path.insert(0, ".")
 # disjoint-copy construction); "quadratic" marks the documented exact
 # all-pairs baselines whose LSH/IVF twins are the production path.
 # queries whose plan builds a VersionedTable fixture on first call
-# (cached per session via _INCR_STORE_CACHE): big-side fixtures are
+# (kept per session under plans.common.fixture_root): big-side fixtures are
 # pre-built UNTIMED (r11 #9) and bench_all splits build from measure
 # (r12 bookkeeping #2). New fixture queries MUST extend this tuple or
 # their rehearsal ratio is cold-build-vs-warm-small skewed.

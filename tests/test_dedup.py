@@ -65,11 +65,63 @@ def test_minhash_estimates_jaccard(spark, corpus):
     assert abs(est - true) < 0.25  # 64 hashes -> stderr ~ 0.06
 
 
+def _jvm_minhash_signatures(frame, num_hashes):
+    """Pure-Catalyst reference for the MinHash kernel: the same
+    in-row gram hashes, then per seed
+    ``array_min(transform(grams, g -> xxhash64(seed, g)))``."""
+    from pyspark.sql import functions as F
+
+    from python_etl_spark.operators.dedup import _gram_hashes
+
+    sig = F.expr(
+        "array("
+        + ",".join(
+            f"array_min(transform(grams, g -> xxhash64({i}, g)))"
+            for i in range(num_hashes)
+        )
+        + ")"
+    )
+    return frame.select(
+        F.col("doc_id").alias("id"), _gram_hashes("text", 3).alias("grams")
+    ).select("id", sig.alias("sig"))
+
+
+def _jvm_simhash(frame):
+    """Pure-Catalyst reference for the SimHash kernel: explode the
+    distinct tokens, sum the 64 per-bit +1/-1 votes in a groupBy and
+    OR-fold the positive bits (NULL text explodes to no rows)."""
+    from pyspark.sql import functions as F
+
+    toks = frame.select(
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(F.split(F.col("text"), " ", -1))).alias(
+            "tok"
+        ),
+    ).withColumn("h", F.xxhash64("tok"))
+    votes = toks.groupBy("id").agg(
+        *[
+            F.expr(
+                f"sum(CASE WHEN (shiftrightunsigned(h, {i}) & 1) = 1 "
+                "THEN 1 ELSE -1 END)"
+            ).alias(f"v{i}")
+            for i in range(64)
+        ]
+    )
+    packed = F.expr(
+        " | ".join(
+            f"(CASE WHEN v{i} > 0 THEN shiftleft(CAST(1 AS BIGINT), {i}) "
+            f"ELSE CAST(0 AS BIGINT) END)"
+            for i in range(64)
+        )
+    )
+    return votes.select("id", packed.alias("simhash"))
+
+
 def test_minhash_arrow_kernel_bit_identical_to_jvm(spark, corpus):
-    """The vectorized numpy xxhash64 kernel (engine='arrow', the
-    default) must reproduce the Catalyst expression path bit-for-bit:
-    same signatures for every doc, including the single-token edge
-    (short doc -> whole-text shingle) and both num_hashes shapes."""
+    """The vectorized numpy xxhash64 kernel must reproduce the Catalyst
+    expression bit-for-bit: same signatures for every doc, including
+    the single-token edge (short doc -> whole-text shingle), string
+    ids and both num_hashes shapes."""
     short = spark.createDataFrame(
         [(10, "one two"), (11, ""), (12, "one")], "doc_id long, text string"
     )
@@ -81,24 +133,19 @@ def test_minhash_arrow_kernel_bit_identical_to_jvm(spark, corpus):
         for nh in (64, 16):
             jvm = {
                 r.id: list(r.sig)
-                for r in minhash_signatures(
-                    frame, num_hashes=nh, engine="jvm"
-                ).collect()
+                for r in _jvm_minhash_signatures(frame, nh).collect()
             }
             arrow = {
                 r.id: list(r.sig)
-                for r in minhash_signatures(
-                    frame, num_hashes=nh, engine="arrow"
-                ).collect()
+                for r in minhash_signatures(frame, num_hashes=nh).collect()
             }
             assert arrow == jvm
 
 
 def test_simhash_arrow_kernel_bit_identical_to_jvm(spark, corpus):
-    """The narrow-map numpy SimHash (engine='arrow', default — zero
-    exchanges) must reproduce the explode+groupBy vote aggregation
-    bit-for-bit, including the bit-63 sign wrap, empty-string docs,
-    and the null-text drop semantics."""
+    """The narrow-map numpy SimHash (zero exchanges) must reproduce the
+    explode+groupBy vote aggregation bit-for-bit, including the bit-63
+    sign wrap, empty-string docs, and the null-text drop semantics."""
     from python_etl_spark.operators.dedup import simhash
 
     edge = spark.createDataFrame(
@@ -106,39 +153,9 @@ def test_simhash_arrow_kernel_bit_identical_to_jvm(spark, corpus):
         "doc_id long, text string",
     )
     for frame in (corpus, edge):
-        jvm = {
-            r.id: r.simhash for r in simhash(frame, engine="jvm").collect()
-        }
-        arrow = {
-            r.id: r.simhash for r in simhash(frame, engine="arrow").collect()
-        }
+        jvm = {r.id: r.simhash for r in _jvm_simhash(frame).collect()}
+        arrow = {r.id: r.simhash for r in simhash(frame).collect()}
         assert arrow == jvm
-
-
-def test_explicit_arrow_engine_is_never_downgraded(spark, corpus, monkeypatch):
-    """Without numpy/pyarrow an EXPLICIT engine='arrow' raises, while
-    the defaulted engine falls back to the JVM twin with the same
-    values; the explicit choice is never silently swapped."""
-    from python_etl_spark.operators import dedup
-
-    want_sig = {
-        r.id: list(r.sig)
-        for r in minhash_signatures(corpus, engine="jvm").collect()
-    }
-    want_sim = {
-        r.id: r.simhash for r in dedup.simhash(corpus, engine="jvm").collect()
-    }
-    monkeypatch.setattr(dedup, "_arrow_engine_available", lambda: False)
-    with pytest.raises(ImportError, match="engine='arrow'"):
-        minhash_signatures(corpus, engine="arrow")
-    with pytest.raises(ImportError, match="engine='arrow'"):
-        dedup.simhash(corpus, engine="arrow")
-    sigs = minhash_signatures(corpus)
-    assert "MapInArrow" not in sigs._jdf.queryExecution().toString()
-    assert {r.id: list(r.sig) for r in sigs.collect()} == want_sig
-    sims = dedup.simhash(corpus)
-    assert "MapInArrow" not in sims._jdf.queryExecution().toString()
-    assert {r.id: r.simhash for r in sims.collect()} == want_sim
 
 
 def test_minhash_lsh_finds_near_dup(spark, corpus):

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from python_etl_spark.operators.dedup import _spread_task_bytes
 from python_etl_spark.session import env_int
 
 
@@ -26,18 +25,6 @@ def test_env_int_unparsable_falls_back_with_warning(monkeypatch, raw):
     monkeypatch.setenv("SPARK_SQL_SHUFFLE_PARTITIONS", raw)
     with pytest.warns(UserWarning, match="SPARK_SQL_SHUFFLE_PARTITIONS"):
         assert env_int("SPARK_SQL_SHUFFLE_PARTITIONS", 32) == 32
-
-
-def test_spread_task_bytes_knob(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD_TASK_BYTES", raising=False)
-    assert _spread_task_bytes() == 96 * 1024
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", "4096")
-    assert _spread_task_bytes() == 4096
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", "0")
-    assert _spread_task_bytes() == 1
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", "96k")
-    with pytest.warns(UserWarning):
-        assert _spread_task_bytes() == 96 * 1024
 
 
 def test_get_spark_reads_shuffle_knob_through_env_int(monkeypatch):
@@ -75,11 +62,11 @@ def test_get_spark_reads_shuffle_knob_through_env_int(monkeypatch):
 
 def test_spread_target_follows_size_estimate(spark, sf_dir, monkeypatch):
     """_spread sizes the sketch stages from Catalyst's estimate:
-    ceil(estimate / SPARK_GRAFT_SPREAD_TASK_BYTES) tasks, capped at the
-    session parallelism, and no repartition when the source already
-    has that many partitions."""
+    ceil(estimate / _SPREAD_TASK_BYTES) tasks, capped at the session
+    parallelism, and no repartition when the source already has that
+    many partitions."""
     from python_etl_spark.frames import estimated_bytes
-    from python_etl_spark.operators.dedup import _spread
+    from python_etl_spark.operators import dedup
     from python_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").coalesce(1)
@@ -88,8 +75,10 @@ def test_spread_target_follows_size_estimate(spark, sf_dir, monkeypatch):
     cap = spark.sparkContext.defaultParallelism
     assert cap >= 2
     for task_bytes, want in ((est, None), (-(-est // 2), 2), (1, cap)):
-        monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", str(task_bytes))
-        out = _spread(docs)
+        # a fresh memo per size: the memo key does not carry it
+        monkeypatch.setattr(dedup, "_SPREAD_TASK_BYTES", task_bytes)
+        monkeypatch.setattr(dedup, "_NPART_MEMO", {})
+        out = dedup._spread(docs)
         if want is None:
             assert out is docs, task_bytes
         else:
